@@ -105,8 +105,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for spark.sql() entry points."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -33,6 +33,23 @@ _MODULES = (
 )
 
 
+def register_into(queries: dict, oracle: dict):
+    """The ``@_register(name, sql=None)`` decorator each plan module binds
+    to its own QUERIES/ORACLE dicts: records the query function, and the
+    oracle SQL when one is given."""
+
+    def register(name: str, sql: str | None = None):
+        def deco(fn):
+            queries[name] = fn
+            if sql is not None:
+                oracle[name] = sql
+            return fn
+
+        return deco
+
+    return register
+
+
 def collect() -> tuple[dict, dict]:
     queries: dict = {}
     oracle: dict = {}

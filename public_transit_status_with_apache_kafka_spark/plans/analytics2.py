@@ -28,19 +28,11 @@ from ..functions.hashing import md5_long, md5_long_sql
 from ..functions.rounding import ratio_round_big, ratio_round_big_sql
 from ..io_util import load
 from ..operators.rank import attach_bounded_rank
+from . import register_into
 
 QUERIES = {}
 ORACLE = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_register = register_into(QUERIES, ORACLE)
 
 
 def _div_round_int(num: Column, den: Column, decimals: int = 6) -> Column:

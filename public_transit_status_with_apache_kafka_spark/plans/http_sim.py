@@ -23,19 +23,11 @@ from pyspark.sql import functions as F
 from ..generator import generate_arrivals, generate_stations
 from ..io_util import scratch_dir
 from ..sources import avro_codec, kafka_sim
+from . import register_into
 
 QUERIES = {}
 ORACLE = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_register = register_into(QUERIES, ORACLE)
 
 
 _ARRIVAL_WIRE = {

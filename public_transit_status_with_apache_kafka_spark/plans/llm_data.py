@@ -21,7 +21,9 @@ from ..functions.rounding import (
 )
 from ..io_util import load
 from ..operators import dedup, graph, multimodal, similarity, text
+from ..session import scoped_conf
 from . import ann_oracle as _ann_oracle
+from . import register_into
 
 QUERIES = {}
 ORACLE = {}
@@ -36,14 +38,7 @@ MAX_BUCKET = 1000
 MAX_DF = 1000
 
 
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_register = register_into(QUERIES, ORACLE)
 
 
 # DuckDB rendering of word_shingles(): distinct (id, shingle) word 3-grams
@@ -4120,6 +4115,16 @@ def x_auc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# BPE training loop conf: 4 shuffle partitions for the vocab-sized
+# iteration frames, and AQE off — it re-plans every micro-stage of the
+# loop, measured 3.6x the wall of static planning with identical merges
+# (adaptive helps corpus shuffles, not tiny loops)
+_BPE_LOOP_CONF = {
+    "spark.sql.shuffle.partitions": "4",
+    "spark.sql.adaptive.enabled": "false",
+}
+
+
 @_register("e4_bpe_merges")
 def e4_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4: distributed BPE merge training — the tokenizer-training
@@ -4139,20 +4144,10 @@ def e4_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the session default applies."""
     from ..operators import bpe
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    # AQE re-plans every micro-stage of the 8-iteration loop: measured
-    # 3.6x the wall of static planning on the vocab-sized frames with
-    # identical merges — adaptive helps corpus shuffles, not tiny loops
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # bpe_merges collects per-iteration argmaxes; the returned merge
-        # table is already a local frame
+    # bpe_merges collects per-iteration argmaxes; the returned merge
+    # table is already a local frame
+    with scoped_conf(spark, _BPE_LOOP_CONF):
         return bpe.bpe_merges(load(spark, sf_dir, "documents"), "text", n_merges=8)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
 @_register("e4_bpe_token_counts")
@@ -4169,18 +4164,11 @@ def e4_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import bpe
 
     docs = load(spark, sf_dir, "documents")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")  # vocab-sized loop
-    spark.conf.set("spark.sql.adaptive.enabled", "false")  # see e4_bpe_merges
-    try:
+    with scoped_conf(spark, _BPE_LOOP_CONF):
         learned = [
             (r.left, r.right)
             for r in bpe.bpe_merges(docs, "text", n_merges=4).collect()
         ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
     return bpe.bpe_segment(docs, "text", "doc_id", learned)
 
 

@@ -20,6 +20,7 @@ from ..functions.hashing import md5_long, md5_long_sql
 from ..functions.rounding import ratio_round_big, ratio_round_big_sql
 from ..io_util import load, scratch_dir
 from ..operators.rank import attach_bounded_rank, stratified_cummin, stratified_rank
+from . import register_into
 
 QUERIES = {}
 ORACLE = {}
@@ -34,14 +35,7 @@ def _dec_div(num, den):
     return ((num - F.pmod(num, den)) / den).cast("long")
 
 
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_register = register_into(QUERIES, ORACLE)
 
 
 # ------------------------------------------------------- frequent pairs

@@ -18,19 +18,11 @@ from ..io_util import load, scratch_dir
 from ..functions.hashing import md5_long_sql
 from ..functions.rounding import ratio_round_big, ratio_round_big_sql
 from ..functions.strings import topic_safe_name, train_id
+from . import register_into
 
 QUERIES = {}
 ORACLE = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_register = register_into(QUERIES, ORACLE)
 
 
 # ---------------------------------------------------------------- sources

@@ -16,21 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io_util import load, scratch_dir
-from .streaming_queries import _await_drained
 from ..operators import search
+from ..streaming.harness import replay
+from . import register_into
 
 QUERIES = {}
 ORACLE = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_register = register_into(QUERIES, ORACLE)
 
 
 # round 12: shared per-(session, fixture) term-frequency front. Five
@@ -206,7 +198,6 @@ def e8_bm25_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups; the serve-side exchange is O(query-term postings). Eager
     like the format round-trips (tempdir store removed in finally)."""
     import shutil
-    import tempfile
 
     docs = load(spark, sf_dir, "documents")
     tmp = scratch_dir("e8_index_")
@@ -261,17 +252,13 @@ def e8_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (eagerly pinned before the swap), to the from-scratch batch twin,
     and the DuckDB oracle hash. File-count bound and idempotence are
     pinned in tests/test_maintenance.py."""
-    import tempfile
-    import shutil
-
     from ..operators import maintenance
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = scratch_dir("index_compact_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        deltas_dir = tmp + "/deltas"
+    # the delta-log generations of a stream maintainer, without the
+    # stream: same scratch, state-store count and cleanup as a replay
+    with replay(spark, "index_compact_") as rp:
+        deltas_dir = rp.path("deltas")
         # round 12 (guide §2.3/§4): ONE corpus tokenize feeds the six
         # delta generations AND the batch twin — the loop form re-ran
         # term_freqs (the mapInPandas Arrow pass) 6+1 times over
@@ -320,9 +307,6 @@ def e8_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register(
@@ -362,28 +346,16 @@ def e8_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB (same stance as e2_stream_incremental_neardup). Delta
     compaction is x_compact_small_files composed over the delta dir.
     """
-    import tempfile
-    import time as _time
-    import shutil
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = scratch_dir("stream_index_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        deltas_dir, seen_dir = tmp + "/deltas", tmp + "/seen"
+    with replay(spark, "stream_index_") as rp:
+        deltas_dir, seen_dir = rp.path("deltas"), rp.path("seen")
         spark.createDataFrame([], "doc_id long").write.parquet(seen_dir)
         spark.createDataFrame(
             [], "tok string, df_delta long, tf_delta long"
         ).write.parquet(deltas_dir)
 
-        part = F.col("doc_id") % 3
-        for j in range(3):
-            d = docs.filter(part == j)
-            if j == 2:  # planted cross-batch redelivery
-                d = d.unionByName(docs.filter(part == 0))
-            d.coalesce(1).write.mode("append").parquet(tmp + "/deliver")
-            _time.sleep(0.05)
+        d0, d1, d2 = (docs.filter(F.col("doc_id") % 3 == j) for j in range(3))
+        rp.deliver([d0, d1, d2.unionByName(d0)])  # planted cross-batch redelivery
 
         def ingest(bdf, _eid: int) -> None:
             from ..operators import maintenance
@@ -413,16 +385,7 @@ def e8_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             if maintenance.dir_stats(seen_dir)[0] > 2:
                 maintenance.compact_delta_log(spark, seen_dir, ["doc_id"], [])
 
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/deliver")
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+        rp.drain(rp.source("doc_id long, text string").writeStream.foreachBatch(ingest))
 
         merged = (
             spark.read.parquet(deltas_dir)
@@ -445,9 +408,6 @@ def e8_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = merged.join(twin, ["term", "df", "total_tf"], "inner")
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register(

@@ -6,6 +6,12 @@ Two kinds:
   - s5/x3: genuinely streaming or codec-bound operators the DuckDB oracle
     cannot express — registered rows-only; their exact-equality checks
     live in tests/ (streaming==batch parity, codec round-trip).
+
+Every file-source replay here runs through streaming/harness.py
+(``with replay(spark, prefix) as rp``): scratch and checkpoint
+directories, the scoped state-store count, time-ordered delivery, the
+one-file-per-micro-batch source and the drain live there, not in the
+queries.
 """
 
 from __future__ import annotations
@@ -18,114 +24,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..generator import ARRIVALS_SCHEMA, generate_arrivals
-from ..io_util import _scratch_root, load, scratch_dir
+from ..io_util import _scratch_root, load
+from ..session import scoped_conf
 from ..sources import avro_codec, kafka_io
 from ..streaming import state as st
+from ..streaming.harness import _await_drained, replay
+from . import register_into
 
 QUERIES = {}
 ORACLE = {}
-
-
-def _register(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
-
-
-def _await_drained(q, timeout: float = 300) -> None:
-    """awaitTermination with the boolean result ASSERTED — a hung
-    availableNow stream must fail loudly as a timeout here, not
-    downstream as a silent row-count mismatch when partial state meets
-    the batch-twin inner join."""
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.name or q.id} did not drain in {timeout}s"
-        )
-
-
-def _write_time_ordered(
-    df, path: str, ts_col: str = "ts", n: int = 3, checkpoint: bool = False
-) -> None:
-    """Write ``n`` delivery files in ascending event-time order with
-    DISTINCT mtimes: the file stream source breaks modification-time
-    ties nondeterministically, and for watermark+append operators an
-    out-of-order delivery jumps the watermark and silently drops late
-    rows (the x_stream_sliding_topk flake). Order-insensitive consumers
-    (update-mode latest/count, the event-time-resolving tracker) don't
-    need this."""
-    import time as _time
-
-    # checkpoint=True materializes once: GENERATOR-backed fixtures
-    # (Python-RDD lineage) would otherwise re-execute for the min/max
-    # agg AND every slice write — n+1 recomputes that dominated the
-    # full-sweep wall cost of every planted fixture stream (round-7
-    # item #3: 25 of x_stream_stream_join's 30 s were these writes).
-    # PARQUET-backed callers must keep the default: their lineage is a
-    # cheap scan, and a forced materialization only ADDS a blocking
-    # pass (x_stream_late_audit measured 3x slower with it).
-    import glob as _glob
-    import os as _os
-
-    if checkpoint:
-        df = df.localCheckpoint()
-    lo, hi = df.agg(F.min(ts_col), F.max(ts_col)).first()
-    span = (hi - lo) / n
-    # round 12: ONE pass instead of n filtered scans — the slice id is
-    # the same range predicate as the per-slice filters (null ts rows
-    # drop, exactly as n range filters dropped them), range-partitioned
-    # so each slice is one file, written in one commit; the per-file
-    # mtime ordering the file source needs is then set explicitly
-    # (os.utime, 1 ms apart, strictly ascending with slice id) instead
-    # of by n separate commits with sleeps between them.
-    sl = F.lit(n - 1)
-    for i in range(n - 2, -1, -1):
-        sl = F.when(F.col(ts_col) < lo + (i + 1) * span, F.lit(i)).otherwise(sl)
-    (
-        df.filter(F.col(ts_col).isNotNull())
-        .withColumn("_slice", sl)
-        .repartitionByRange(n, "_slice")
-        .write.partitionBy("_slice")
-        .mode("append")
-        .parquet(path)
-    )
-    base_ns = _time.time_ns()  # also the per-call name token: a second
-    # delivery into the same dir must not collide with the first's files
-    # Round 13 (ADVICE r12): (a) every file gets a DISTINCT mtime —
-    # strictly ascending with (slice, name) — so a slice that ever
-    # spans multiple part files cannot reintroduce the mtime-tie
-    # nondeterminism this function exists to exclude; (b) a slice with
-    # no rows (possible when the ts distribution degenerates, e.g. an
-    # all-equal-ts input collapses every row into slice n-1) is
-    # backfilled with an empty single-file commit, preserving the
-    # n-micro-batches delivery convention the cross-batch-state
-    # consumers prove coverage with (the old per-slice append wrote an
-    # empty commit for exactly this case).
-    for i in range(n):
-        d = _os.path.join(path, f"_slice={i}")
-        files = sorted(_glob.glob(_os.path.join(d, "*.parquet")))
-        if not files:
-            empty_d = _os.path.join(path, f"_empty={i}")
-            (
-                df.filter(F.col(ts_col).isNotNull())
-                .limit(0)  # schema-only: matches the delivered files
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(empty_d)
-            )
-            files = sorted(_glob.glob(_os.path.join(empty_d, "*.parquet")))
-            assert files, f"empty-slice backfill wrote no file for slice {i}"
-        for j, f in enumerate(files):
-            dst = _os.path.join(path, f"slice-{base_ns}-{i:05d}-{j:03d}.parquet")
-            _os.rename(f, dst)
-            t = base_ns + (i * 1_000 + j) * 1_000_000
-            _os.utime(dst, ns=(t, t))
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(_os.path.join(path, f"_empty={i}"), ignore_errors=True)
+_register = register_into(QUERIES, ORACLE)
 
 
 # ------------------------------------------------------------- W1/W2
@@ -465,7 +373,6 @@ def cta_broker_dashboard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
     from ..generator import STATIONS_SCHEMA, generate_all
-    from ..operators import cta_views
     from ..sources import kafka_sim
     from ..streaming import views as sv
 
@@ -499,15 +406,8 @@ def cta_broker_dashboard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         return int(ts.timestamp() * 1000)
 
     fx = generate_all(spark)
-    tmp = scratch_dir("cta_broker_")
-    queries = []
-    # fixture-sized stream: 4 concurrent stateful queries x 32 state
-    # stores per micro-batch is pure overhead (the x3_stream_*
-    # convention; round-7 item #3 — this was the 2nd-costliest sweep row)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        b = kafka_sim.SimBroker(os.path.join(tmp, "log"), default_partitions=3)
+    with replay(spark, "cta_broker_") as rp:
+        b = kafka_sim.SimBroker(rp.path("log"), default_partitions=3)
         # round 10: the two UNKEYED JSON topics get one partition each —
         # every kafkasim partition is a Python-datasource read task per
         # trigger, and with four concurrent queries those tasks are the
@@ -631,39 +531,46 @@ def cta_broker_dashboard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("v.status").alias("status"),
             )
         )
-        streams = {
-            "cta_bk_dim": sv.stations_dim_stream(stations),
-            "cta_bk_counts": sv.turnstile_counts_stream(turnstile),
-            "cta_bk_pos": sv.train_positions_stream(arrivals),
-            "cta_bk_weather": sv.weather_now_stream(weather),
-        }
-        # availableNow drain (round 10): the four concurrent queries
-        # process their backlog and terminate themselves — same views,
-        # no processAllAvailable idle-detection round per query
-        queries = [
-            sv.start_memory_view(df, name, available_now=True)
-            for name, df in streams.items()
-        ]
-        for q in queries:
-            _await_drained(q)
-        streamed = cta_views.dashboard(
-            spark.table("cta_bk_dim"),
-            spark.table("cta_bk_pos"),
-            spark.table("cta_bk_counts"),
+        return _dashboard_parity(
+            rp,
+            "cta_bk",
+            fx,
+            dim=sv.stations_dim_stream(stations),
+            counts=sv.turnstile_counts_stream(turnstile),
+            pos=sv.train_positions_stream(arrivals),
+            weather=sv.weather_now_stream(weather),
         )
-        batch = cta_views.dashboard(
-            cta_views.stations_dim(fx["stations"]),
-            cta_views.train_positions(fx["arrivals"]),
-            cta_views.turnstile_counts(fx["turnstile"]),
-        )
-        out = streamed.join(batch, on=list(streamed.columns), how="inner")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        for q in queries:
-            q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _dashboard_parity(rp, prefix: str, fx: dict, **views: DataFrame) -> DataFrame:
+    """Shared tail of the two dashboard streams: the four views (dim,
+    counts, pos, weather) start together as availableNow memory views
+    named ``{prefix}_{view}``, drain, and the dashboard over them is
+    inner-joined on every column to the batch dashboard over the same
+    fixtures — parity encoded in the row count. Collected before the
+    replay stops the views."""
+    from ..operators import cta_views
+    from ..streaming import views as sv
+
+    spark = rp.spark
+    queries = [
+        rp.track(sv.start_memory_view(df, f"{prefix}_{view}", available_now=True))
+        for view, df in views.items()
+    ]
+    for q in queries:
+        _await_drained(q)
+    streamed = cta_views.dashboard(
+        spark.table(f"{prefix}_dim"),
+        spark.table(f"{prefix}_pos"),
+        spark.table(f"{prefix}_counts"),
+    )
+    batch = cta_views.dashboard(
+        cta_views.stations_dim(fx["stations"]),
+        cta_views.train_positions(fx["arrivals"]),
+        cta_views.turnstile_counts(fx["turnstile"]),
+    )
+    out = streamed.join(batch, on=list(streamed.columns), how="inner")
+    return spark.createDataFrame(out.collect(), out.schema)
 
 
 # ------------------------------------------------------------- W1/M1 scale
@@ -745,31 +652,16 @@ def _a4_stateful_replay(spark: SparkSession, sf_dir: str, effects_fn) -> DataFra
         .filter(F.col("event_id") % 7 == 0)
         .select("user_id", "event_type", "ts", "event_id")
     )
-    tmp = scratch_dir("x3_replay_")
-    # fixture-sized stream: 32 state stores per micro-batch is pure
-    # overhead here (the x3_stream_* convention; round-7 item #3) — but
-    # unlike the other x3 streams, THIS replay's per-batch work is the
-    # per-user stateful kernel over ~1500 groups, so the state
-    # partition count is also the kernel's Python-side parallelism
-    # (round 12: A/B'd 2 vs 4 vs 8 on this box, see OPTIMIZATION_r12.md;
-    # two deliveries stay — the a18e44f two-slice precedent: cross-batch
-    # journey state needs >= 2 batches, a third proves nothing new)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_A4_STATE_PARTITIONS))
-    try:
-        # time-ordered delivery with DISTINCT file mtimes: the journey
-        # kernel's prev-station state is ORDER-DEPENDENT (unlike the
-        # latest-effect folds, which resolve order via the event-time
-        # key), and the file source breaks mtime ties arbitrarily — a
-        # single-commit range write delivered batches out of order and
-        # mis-derived prev stations (caught by the full oracle)
-        _write_time_ordered(ev, tmp, n=2)
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
-        )
-        effects = effects_fn(src)
+    # the state partition count is also the journey kernel's Python
+    # parallelism (_A4_STATE_PARTITIONS); two deliveries — cross-batch
+    # journey state needs >= 2 batches, a third proves nothing new
+    with replay(spark, "x3_replay_", _A4_STATE_PARTITIONS) as rp:
+        # time-ordered delivery: the journey kernel's prev-station state
+        # is ORDER-DEPENDENT (unlike the latest-effect folds, which
+        # resolve order via the event-time key) — an out-of-order
+        # delivery mis-derived prev stations (caught by the full oracle)
+        rp.deliver_time_ordered(ev, n=2)
+        effects = effects_fn(rp.source(ev.schema))
         served: dict = {}
 
         def fold(batch_df, _bid):
@@ -786,14 +678,7 @@ def _a4_stateful_replay(spark: SparkSession, sf_dir: str, effects_fn) -> DataFra
                 if cur is None or key > cur[0]:
                     served[r.station] = (key, r.m.occupant, r.m.event_id)
 
-        q = (
-            effects.writeStream.outputMode("append")
-            .foreachBatch(fold)
-            .option("checkpointLocation", tmp + "_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+        rp.drain(effects.writeStream.outputMode("append").foreachBatch(fold))
         streamed = spark.createDataFrame(
             [(s, occ, eid) for s, (_, occ, eid) in sorted(served.items())],
             "station string, occupant_user_id long, last_event_id long",
@@ -812,10 +697,6 @@ def _a4_stateful_replay(spark: SparkSession, sf_dir: str, effects_fn) -> DataFra
         rows = out.collect()
         assert len(rows) == len(served), "streamed A4 state disagrees with batch"
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(tmp + "_ckpt", ignore_errors=True)
 
 
 @_register("x3_stateful_stream_replay", sql=_A4_REPLAY_SQL)
@@ -847,39 +728,18 @@ def x3_stateful_stream_replay_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the CTA arrivals fixture."""
     from ..streaming import state_v2 as st2
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
     # round 12: changelog checkpointing — per-batch commits upload a
     # small changelog instead of a full RocksDB snapshot (A/B'd on this
     # box: replay medians 14.8 -> 12.4 s, mins 11.1 -> 8.6 s); a
     # checkpoint-format knob only, and this replay's checkpoint dir is
     # fresh per invocation so there is no old-format log to collide with
-    changelog_key = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    try:
-        old_provider = spark.conf.get(provider_key)
-    except Exception:
-        old_provider = None
-    try:
-        old_changelog = spark.conf.get(changelog_key)
-    except Exception:
-        old_changelog = None
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    spark.conf.set(changelog_key, "true")
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    conf = {
+        "spark.sql.streaming.stateStore.providerClass": rocksdb,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
+    with scoped_conf(spark, conf):
         return _a4_stateful_replay(spark, sf_dir, st2.user_journey_effects_v2)
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
-        if old_changelog is None:
-            spark.conf.unset(changelog_key)
-        else:
-            spark.conf.set(changelog_key, old_changelog)
 
 
 @_register("x_stream_stream_join")
@@ -896,13 +756,7 @@ def x_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import views as sv
 
     fx = generate_all(spark)
-    tmp = scratch_dir("ss_join_")
-    # fixture-sized stream: 32 state stores per join side per micro-batch
-    # is pure overhead here (the x3_stream_* convention) — at production
-    # volume the partition count is sized to state, not defaulted
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with replay(spark, "ss_join_") as rp:
         # two delivery files per side: cross-batch pairing needs >= 2
         # micro-batches, and each extra batch of a two-sided stateful
         # join is the costliest scheduling unit in the whole registry
@@ -910,26 +764,16 @@ def x_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         for name in ("arrivals", "weather"):
             # checkpoint: generator fixtures re-execute Python-RDD
             # lineage per action otherwise
-            _write_time_ordered(fx[name], f"{tmp}/{name}", n=2, checkpoint=True)
-        a_src = (
-            spark.readStream.schema(ARRIVALS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/arrivals")
-        )
-        w_src = (
-            spark.readStream.schema(WEATHER_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/weather")
-        )
-        q = (
-            sv.arrivals_with_weather_stream(a_src, w_src)
+            rp.deliver_time_ordered(fx[name], n=2, name=name, checkpoint=True)
+        rp.drain(
+            sv.arrivals_with_weather_stream(
+                rp.source(ARRIVALS_SCHEMA, "arrivals"),
+                rp.source(WEATHER_SCHEMA, "weather"),
+            )
             .writeStream.outputMode("append")
             .format("memory")
             .queryName("x_ss_join")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
         streamed = spark.table("x_ss_join")
         batch = (
             fx["arrivals"]
@@ -944,9 +788,6 @@ def x_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = streamed.join(batch, on=list(streamed.columns), how="inner")
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register("x_stream_heavy_hitters")
@@ -980,35 +821,20 @@ def x_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok")
         )
     )
-    tmp = scratch_dir("stream_hh_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with replay(spark, "stream_hh_") as rp:
         # three delivery files -> three micro-batches
-        for i in range(3):
-            toks.filter(
-                F.floor(F.col("doc_id") / 4) % 3 == i
-            ).coalesce(1).write.mode("append").parquet(tmp + "/data")
-        src = (
-            spark.readStream.schema(toks.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/data")
+        rp.deliver(
+            toks.filter(F.floor(F.col("doc_id") / 4) % 3 == i) for i in range(3)
         )
 
         def fold(batch_df, _batch_id):
             sk.cms_partials(batch_df, "tok", d=d, w=w).write.mode("append").parquet(
-                tmp + "/partials"
+                rp.path("partials")
             )
 
-        q = (
-            src.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+        rp.drain(rp.source(toks.schema).writeStream.foreachBatch(fold))
         merged = (
-            spark.read.parquet(tmp + "/partials")
+            spark.read.parquet(rp.path("partials"))
             .groupBy("r", "c")
             .agg(F.sum("n").alias("n"))
             .collect()
@@ -1028,9 +854,6 @@ def x_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.desc("est_count"), F.asc("token")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register("x_stream_dedup")
@@ -1057,34 +880,16 @@ def x_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts", "user_id", "event_type")
     )
     cols = ["event_id", "ts", "user_id", "event_type"]
-    tmp = scratch_dir("stream_dedup_")
-    # stateful-operator parallelism follows shuffle.partitions at stream
-    # start; 500 planted events do not need 32 state stores, and each
-    # store is a per-batch checkpoint commit (most of this query's local
-    # wall time). Scoped + restored: the 100 TB setting stays the
-    # session default.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        # two identical single-file deliveries -> two micro-batches
-        e.coalesce(1).write.mode("overwrite").parquet(tmp + "/data")
-        e.coalesce(1).write.mode("append").parquet(tmp + "/data")
-        src = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/data")
-        )
-        q = (
-            src.withWatermark("ts", "30 days")
+    with replay(spark, "stream_dedup_") as rp:
+        rp.deliver([e, e])  # two identical deliveries -> two micro-batches
+        rp.drain(
+            rp.source(e.schema)
+            .withWatermark("ts", "30 days")
             .dropDuplicatesWithinWatermark(["event_id"])
             .writeStream.outputMode("append")
             .format("memory")
             .queryName("x_stream_dedup")
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
         streamed = spark.table("x_stream_dedup")
         once = (
             streamed.groupBy(*cols)
@@ -1095,9 +900,6 @@ def x_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = once.join(e, cols, "inner")
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register(
@@ -1155,9 +957,6 @@ def x_stream_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") % 10 == 0)
         .select("ts", "event_type", "value")
     )
-    tmp = scratch_dir("stream_sliding_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
 
     def windowed(df):
         # DECIMAL(18,2)-summed value (the x3_stream_skyline convention):
@@ -1180,23 +979,14 @@ def x_stream_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    try:
-        _write_time_ordered(ev, tmp + "/data", n=2)
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/data")
-        )
-        q = (
-            windowed(src.withWatermark("ts", "2 hours"))
+    with replay(spark, "stream_sliding_") as rp:
+        rp.deliver_time_ordered(ev, n=2)
+        rp.drain(
+            windowed(rp.source(ev.schema).withWatermark("ts", "2 hours"))
             .writeStream.outputMode("append")
             .format("memory")
             .queryName("x_stream_sliding")
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
         streamed = spark.table("x_stream_sliding")
         # append mode withholds windows the watermark hasn't closed at
         # stream end; parity = streamed set must be a subset of batch
@@ -1220,9 +1010,6 @@ def x_stream_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_streamed = streamed.count()
         assert agreed.count() == n_streamed, "streamed window disagrees with batch"
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register("x3_stream_funnel")
@@ -1302,19 +1089,9 @@ def x3_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    tmp = scratch_dir("stream_funnel_")
-    # fixture-sized stream: 32 state stores per micro-batch is pure
-    # overhead here (the x3_stream_* convention; round-7 item #3)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        _write_time_ordered(ev, tmp + "/data", n=2)
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/data")
-        )
-        tracked = src.groupBy("user_id").applyInPandasWithState(
+    with replay(spark, "stream_funnel_") as rp:
+        rp.deliver_time_ordered(ev, n=2)
+        tracked = rp.source(ev.schema).groupBy("user_id").applyInPandasWithState(
             funnel_machine,
             outputStructType=out_schema,
             stateStructType=state_schema,
@@ -1327,14 +1104,7 @@ def x3_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in batch_df.collect():
                 served[r.user_id] = (r.reached_step, r.t1_us, r.t2_us, r.t3_us)
 
-        q = (
-            tracked.writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+        rp.drain(tracked.writeStream.outputMode("update").foreachBatch(upsert))
         streamed = spark.createDataFrame(
             [
                 (u, step, t1 // 1000 if t1 >= 0 else None,
@@ -1375,9 +1145,6 @@ def x3_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "streamed funnel state disagrees with batch cascade"
         )
         return spark.createDataFrame(rows, agreed.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register(
@@ -1439,9 +1206,6 @@ def x_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") < 40)
         .select("ts", "user_id", "event_id")
     )
-    tmp = scratch_dir("stream_session_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
 
     def sessions(df):
         return (
@@ -1455,23 +1219,14 @@ def x_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    try:
-        _write_time_ordered(ev, tmp + "/data", n=2)
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/data")
-        )
-        q = (
-            sessions(src.withWatermark("ts", "1 hour"))
+    with replay(spark, "stream_session_") as rp:
+        rp.deliver_time_ordered(ev, n=2)
+        rp.drain(
+            sessions(rp.source(ev.schema).withWatermark("ts", "1 hour"))
             .writeStream.outputMode("append")
             .format("memory")
             .queryName("x_stream_session")
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
         streamed = spark.table("x_stream_session")
         batch = sessions(ev)
         agreed = streamed.join(
@@ -1482,9 +1237,6 @@ def x_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = agreed.collect()
         assert len(rows) == streamed.count(), "streamed session disagrees with batch"
         return spark.createDataFrame(rows, agreed.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register("cta_fixture_dashboard_stream")
@@ -1506,62 +1258,26 @@ def cta_fixture_dashboard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         WEATHER_SCHEMA,
         generate_all,
     )
-    from ..operators import cta_views
     from ..streaming import views as sv
 
     fx = generate_all(spark)
-    tmp = scratch_dir("cta_dash_stream_")
-    queries = []
-    # fixture-sized stream: 32 state stores per micro-batch is pure
-    # overhead here (the x3_stream_* convention; round-7 item #3)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        dirs = {}
+    with replay(spark, "cta_dash_stream_") as rp:
         for name, df in fx.items():
-            path = f"{tmp}/{name}"
             split_col = {"stations": "stop_id"}.get(name, "ts")
-            df.repartitionByRange(3, F.col(split_col)).write.parquet(path)
-            dirs[name] = path
-        streams = {
-            "cta_fx_dim": sv.stations_dim_stream(
-                sv.stream_from_directory(spark, dirs["stations"], STATIONS_SCHEMA)
-            ),
-            "cta_fx_counts": sv.turnstile_counts_stream(
-                sv.stream_from_directory(spark, dirs["turnstile"], TURNSTILE_SCHEMA)
-            ),
-            "cta_fx_pos": sv.train_positions_stream(
-                sv.stream_from_directory(spark, dirs["arrivals"], ARRIVALS_SCHEMA)
-            ),
-            "cta_fx_weather": sv.weather_now_stream(
-                sv.stream_from_directory(spark, dirs["weather"], WEATHER_SCHEMA)
-            ),
-        }
-        queries = [
-            sv.start_memory_view(df, name, available_now=True)
-            for name, df in streams.items()
-        ]
-        for q in queries:
-            _await_drained(q)
-        streamed = cta_views.dashboard(
-            spark.table("cta_fx_dim"),
-            spark.table("cta_fx_pos"),
-            spark.table("cta_fx_counts"),
+            df.repartitionByRange(3, F.col(split_col)).write.parquet(rp.path(name))
+
+        def stream(name, schema):
+            return sv.stream_from_directory(spark, rp.path(name), schema)
+
+        return _dashboard_parity(
+            rp,
+            "cta_fx",
+            fx,
+            dim=sv.stations_dim_stream(stream("stations", STATIONS_SCHEMA)),
+            counts=sv.turnstile_counts_stream(stream("turnstile", TURNSTILE_SCHEMA)),
+            pos=sv.train_positions_stream(stream("arrivals", ARRIVALS_SCHEMA)),
+            weather=sv.weather_now_stream(stream("weather", WEATHER_SCHEMA)),
         )
-        batch = cta_views.dashboard(
-            cta_views.stations_dim(fx["stations"]),
-            cta_views.train_positions(fx["arrivals"]),
-            cta_views.turnstile_counts(fx["turnstile"]),
-        )
-        out = streamed.join(batch, on=list(streamed.columns), how="inner")
-        # materialize before tearing down the memory views/temp dirs
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        for q in queries:
-            q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register(
@@ -1671,28 +1387,19 @@ def x3_stream_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = added.unionByName(changed).unionByName(deleted)
     events = events.unionByName(events)  # at-least-once: every event twice
 
-    tmp = scratch_dir("stream_snapmerge_")
-    # fixture-sized stream: 32 state stores per micro-batch is pure
-    # overhead here (the x3_stream_* convention; round-7 item #3)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        snap_paths = {"cur": tmp + "/snap_init"}
+    with replay(spark, "stream_snapmerge_") as rp:
+        snap_paths = {"cur": rp.path("snap_init")}
         snap_a.write.parquet(snap_paths["cur"])
         # two micro-batches suffice (round 9, the r8 #3 precedent):
         # cross-batch MERGE accretion needs >= 2 batches, and the
         # at-least-once duplicate pairs share a ts so they always land
         # in the SAME slice — more batches add trigger overhead, not
         # coverage
-        _write_time_ordered(events, tmp + "/data", n=2)
-
-        src = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/data")
-        )
-        deduped = src.withWatermark("ts", "30 days").dropDuplicates(
-            ["o_orderkey", "ts"]
+        rp.deliver_time_ordered(events, n=2)
+        deduped = (
+            rp.source(events.schema)
+            .withWatermark("ts", "30 days")
+            .dropDuplicates(["o_orderkey", "ts"])
         )
 
         def merge_batch(batch_df, bid):
@@ -1726,18 +1433,11 @@ def x3_stream_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("o_totalprice"),
                 )
             )
-            nxt = f"{tmp}/snap_v{bid}"
+            nxt = rp.path(f"snap_v{bid}")
             merged.write.mode("overwrite").parquet(nxt)
             snap_paths["cur"] = nxt
 
-        q = (
-            deduped.writeStream.outputMode("append")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+        rp.drain(deduped.writeStream.outputMode("append").foreachBatch(merge_batch))
 
         maintained = spark.read.parquet(snap_paths["cur"])
         streamed_diff = snapshot_diff(
@@ -1762,9 +1462,6 @@ def x3_stream_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert n_agreed == n_stream == n_batch, (n_agreed, n_stream, n_batch)
         rows = agreed.collect()
         return spark.createDataFrame(rows, agreed.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register("x3_stream_gap_monitor")
@@ -1835,19 +1532,9 @@ def x3_stream_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    tmp = scratch_dir("stream_gaps_")
-    # fixture-sized stream: 32 state stores per micro-batch is pure
-    # overhead here (the x3_stream_* convention; round-7 item #3)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        _write_time_ordered(ev, tmp + "/data", n=2)
-        src = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/data")
-        )
-        tracked = src.groupBy("user_id").applyInPandasWithState(
+    with replay(spark, "stream_gaps_") as rp:
+        rp.deliver_time_ordered(ev, n=2)
+        tracked = rp.source(ev.schema).groupBy("user_id").applyInPandasWithState(
             gap_machine,
             outputStructType=out_schema,
             stateStructType=state_schema,
@@ -1860,14 +1547,7 @@ def x3_stream_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in batch_df.collect():
                 served[r.user_id] = (r.n_events, r.max_gap_ms)
 
-        q = (
-            tracked.writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+        rp.drain(tracked.writeStream.outputMode("update").foreachBatch(upsert))
         streamed = spark.createDataFrame(
             [(u, n, g) for u, (n, g) in served.items()],
             "user_id long, n_events long, max_gap_ms long",
@@ -1897,9 +1577,6 @@ def x3_stream_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert n_agreed == n_stream == n_batch, (n_agreed, n_stream, n_batch)
         rows = agreed.collect()
         return spark.createDataFrame(rows, agreed.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stream_neardup_oracle_sql() -> str:
@@ -1999,10 +1676,7 @@ def e2_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
             d, "text", "doc_id", k=SHINGLE_K, n_hashes=N_HASHES, spread=True
         )
 
-    tmp = scratch_dir("stream_neardup_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with replay(spark, "stream_neardup_") as rp:
         allsig = sig(docs).localCheckpoint()  # ONE corpus minhash pass
         hist_sig = allsig.filter(F.col("id") % 10 != 0)
 
@@ -2011,23 +1685,16 @@ def e2_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
                 (F.col("id") % 10 == 0) & (F.expr("(id div 10) % 2") == j)
             )
 
-        index_dir = tmp + "/band_index"
-        pairs_dir = tmp + "/pairs"
+        index_dir = rp.path("band_index")
+        pairs_dir = rp.path("pairs")
         _banded(hist_sig, N_HASHES, BANDS).write.parquet(index_dir)
         spark.createDataFrame([], "batch_id long, hist_id long").write.parquet(
             pairs_dir
         )
 
-        import time as _time
-
-        for j in range(2):
-            part = batch.filter(F.col("batch_no") == j).select("doc_id", "text")
-            if j == 1:  # planted cross-batch redelivery
-                part = part.unionByName(
-                    batch.filter(F.col("batch_no") == 0).select("doc_id", "text")
-                )
-            part.coalesce(1).write.mode("append").parquet(tmp + "/deliver")
-            _time.sleep(0.05)
+        ingest0 = batch.filter(F.col("batch_no") == 0).select("doc_id", "text")
+        ingest1 = batch.filter(F.col("batch_no") == 1).select("doc_id", "text")
+        rp.deliver([ingest0, ingest1.unionByName(ingest0)])  # planted redelivery
 
         def ingest(bdf, _eid: int) -> None:
             idx = spark.read.parquet(index_dir)
@@ -2049,7 +1716,7 @@ def e2_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
             # rename).
             import glob as _glob
 
-            stage = f"{tmp}/stage_{_eid}"
+            stage = rp.path(f"stage_{_eid}")
             _banded(sig(fresh), N_HASHES, BANDS).write.parquet(stage)
             bb = spark.read.parquet(stage)
             lsh_probe_banded(bb, idx, MAX_BUCKET).write.mode("append").parquet(
@@ -2063,16 +1730,7 @@ def e2_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
                 )
             shutil.rmtree(stage, ignore_errors=True)
 
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/deliver")
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+        rp.drain(rp.source("doc_id long, text string").writeStream.foreachBatch(ingest))
 
         streamed_once = (
             spark.read.parquet(pairs_dir)
@@ -2094,9 +1752,6 @@ def e2_stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register(
@@ -2124,31 +1779,19 @@ def x_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (delivery 0's rows ride again inside delivery 2) is absorbed by
     algebra — exactly-once COUNTING from at-least-once delivery.
     Delta compaction is x_compact_small_files composed over the log."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ..operators import bitmap
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_custkey"
     )
-    tmp = scratch_dir("stream_bitmap_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        deltas_dir = tmp + "/word_deltas"
+    with replay(spark, "stream_bitmap_") as rp:
+        deltas_dir = rp.path("word_deltas")
         spark.createDataFrame(
             [], "o_orderpriority string, w_idx long, word long"
         ).write.parquet(deltas_dir)
 
-        part = F.col("o_orderkey") % 3
-        for j in range(3):
-            d = orders.filter(part == j)
-            if j == 2:  # planted cross-batch redelivery
-                d = d.unionByName(orders.filter(part == 0))
-            d.coalesce(1).write.mode("append").parquet(tmp + "/deliver")
-            _time.sleep(0.05)
+        d0, d1, d2 = (orders.filter(F.col("o_orderkey") % 3 == j) for j in range(3))
+        rp.deliver([d0, d1, d2.unionByName(d0)])  # planted cross-batch redelivery
 
         def ingest(bdf, _eid: int) -> None:
             bitmap.bitmap_words(bdf, ["o_orderpriority"], "o_custkey").drop(
@@ -2166,18 +1809,10 @@ def x_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                     fold="bit_or",
                 )
 
-        q = (
-            spark.readStream.schema(
-                "o_orderkey long, o_orderpriority string, o_custkey long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/deliver")
+        rp.drain(
+            rp.source("o_orderkey long, o_orderpriority string, o_custkey long")
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
 
         merged = (
             spark.read.parquet(deltas_dir)
@@ -2195,9 +1830,6 @@ def x_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = merged.join(twin, ["o_orderpriority", "n_distinct"], "inner")
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register(
@@ -2278,26 +1910,17 @@ def x3_stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "signup_ts_ms",
         )
 
-    tmp = scratch_dir("stream_temporal_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        _write_time_ordered(fact, tmp + "/deliver", n=2)
-        enriched_dir = tmp + "/enriched"
+    with replay(spark, "stream_temporal_") as rp:
+        rp.deliver_time_ordered(fact, n=2)
+        enriched_dir = rp.path("enriched")
 
         def ingest(bdf, _eid: int) -> None:
             enrich(bdf).write.mode("append").parquet(enriched_dir)
 
-        q = (
-            spark.readStream.schema("event_id long, user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/deliver")
+        rp.drain(
+            rp.source("event_id long, user_id long, ts timestamp")
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
 
         twin = enrich(fact)
         out = spark.read.parquet(enriched_dir).join(
@@ -2307,9 +1930,6 @@ def x3_stream_temporal_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register(
@@ -2379,12 +1999,7 @@ def x_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") < 30)
         .select("event_id", "ts", "user_id")
     )
-    tmp = scratch_dir("late_audit_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        import time as _time
-
+    with replay(spark, "late_audit_") as rp:
         lo = ev.agg(F.min("ts")).first()[0]
         hour0_end = F.lit(lo) + F.expr("INTERVAL 1 HOUR")
         # stragglers: a deterministic slice of the FIRST hour
@@ -2393,14 +2008,9 @@ def x_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch1 = ev.filter(~straggler & (F.col("ts") < F.lit(lo) + F.expr("INTERVAL 3 HOURS")))
         batch2 = ev.filter(F.col("ts") >= F.lit(lo) + F.expr("INTERVAL 3 HOURS"))
         batch3 = ev.filter(straggler)  # replayed too late
-        for b in (batch1, batch2, batch3):
-            b.coalesce(1).write.mode("append").parquet(tmp + "/deliver")
-            _time.sleep(0.05)
-
-        q = (
-            spark.readStream.schema("event_id long, ts timestamp, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/deliver")
+        rp.deliver([batch1, batch2, batch3])
+        rp.drain(
+            rp.source("event_id long, ts timestamp, user_id long")
             .withWatermark("ts", "30 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"))
             .agg(F.count("*").alias("n_stream"))
@@ -2408,11 +2018,7 @@ def x_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .writeStream.outputMode("append")
             .format("memory")
             .queryName("x_stream_late_audit")
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
         streamed = spark.table("x_stream_late_audit")
         truth = (
             ev.groupBy(F.window("ts", "1 hour").alias("w"))
@@ -2447,9 +2053,6 @@ def x_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stream_ann_oracle_sql() -> str:
@@ -2552,22 +2155,13 @@ def e3_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = base.orderBy("vec_id").limit(16).localCheckpoint(eager=False)
     queries_df = emb.filter(F.col("vec_id") < 5)
 
-    tmp = scratch_dir("stream_ann_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        cells_dir = tmp + "/cells"
+    with replay(spark, "stream_ann_") as rp:
+        cells_dir = rp.path("cells")
         similarity.ivf_assign_cells(base, centroids).write.parquet(cells_dir)
 
-        part = F.col("vec_id") % 9  # arriving ids are ≡2 mod 3: 2/5/8
-        import time as _time
-
-        for j, m in enumerate((2, 5, 8)):
-            d = arriving.filter(part == m)
-            if j == 2:  # planted cross-batch redelivery
-                d = d.unionByName(arriving.filter(part == 2))
-            d.coalesce(1).write.mode("append").parquet(tmp + "/deliver")
-            _time.sleep(0.05)
+        # arriving ids are ≡2 mod 3: 2/5/8
+        d0, d1, d2 = (arriving.filter(F.col("vec_id") % 9 == m) for m in (2, 5, 8))
+        rp.deliver([d0, d1, d2.unionByName(d0)])  # planted cross-batch redelivery
 
         def ingest(bdf, _eid: int) -> None:
             seen = spark.read.parquet(cells_dir).select("vec_id")
@@ -2576,18 +2170,10 @@ def e3_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "append"
             ).parquet(cells_dir)
 
-        q = (
-            spark.readStream.schema(
-                "vec_id long, embedding array<float>, label int"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/deliver")
+        rp.drain(
+            rp.source("vec_id long, embedding array<float>, label int")
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
 
         streamed_cells = spark.read.parquet(cells_dir)
         twin_cells = similarity.ivf_assign_cells(emb, centroids)
@@ -2602,9 +2188,6 @@ def e3_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @_register(
@@ -2643,27 +2226,17 @@ def e5_stream_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = scratch_dir("stream_media_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        store_dir = tmp + "/features"
+    with replay(spark, "stream_media_") as rp:
+        store_dir = rp.path("features")
         spark.createDataFrame(
             [], "id long, n_bytes int, magic string, n_feats int, feat0 double"
         ).write.parquet(store_dir)
 
-        import time as _time
-
         # two micro-batches (round 9, the r8 #3 precedent): the
         # cross-batch redelivery needs exactly two — ingest 0's docs
         # ride again inside delivery 1
-        part = F.col("doc_id") % 2
-        for j in range(2):
-            d = docs.filter(part == j)
-            if j == 1:  # planted cross-batch redelivery
-                d = d.unionByName(docs.filter(part == 0))
-            d.coalesce(1).write.mode("append").parquet(tmp + "/deliver")
-            _time.sleep(0.05)
+        d0, d1 = (docs.filter(F.col("doc_id") % 2 == j) for j in range(2))
+        rp.deliver([d0, d1.unionByName(d0)])
 
         def ingest(bdf, _eid: int) -> None:
             seen = spark.read.parquet(store_dir).select(
@@ -2683,16 +2256,7 @@ def e5_stream_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             out.write.mode("append").parquet(store_dir)
 
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/deliver")
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+        rp.drain(rp.source("doc_id long, text string").writeStream.foreachBatch(ingest))
 
         mm = multimodal.with_binary_payload(docs, "text", "doc_id")
         twin = (
@@ -2712,9 +2276,6 @@ def e5_stream_media_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("id", "n_bytes", "magic", "n_feats")
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ------------------------------------------------ streaming attribution
@@ -2814,22 +2375,20 @@ def x3_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    tmp = scratch_dir("stream_attr_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        deliver = tmp + "/deliver"
-        _write_time_ordered(ev, deliver, n=2)
+    with replay(spark, "stream_attr_") as rp:
+        rp.deliver_time_ordered(ev, n=2)
         # planted redelivery: 50 earliest clicks arrive AGAIN last
-        import time as _time
+        rp.deliver(
+            [
+                spark.read.parquet(rp.path("data"))
+                .orderBy("ts")
+                .filter(F.col("event_type") == "click")
+                .limit(50)
+            ]
+        )
 
-        _time.sleep(0.05)
-        spark.read.parquet(deliver).orderBy("ts").filter(
-            F.col("event_type") == "click"
-        ).limit(50).coalesce(1).write.mode("append").parquet(deliver)
-
-        index_dir = tmp + "/click_index"
-        out_dir = tmp + "/attributed"
+        index_dir = rp.path("click_index")
+        out_dir = rp.path("attributed")
 
         def ingest(bdf, _eid: int) -> None:
             bc = bdf.filter(F.col("event_type") == "click").select(
@@ -2855,18 +2414,10 @@ def x3_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             clicks = bdf.sparkSession.read.parquet(index_dir)
             attribute(purchases, clicks).write.mode("append").parquet(out_dir)
 
-        q = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(deliver)
+        rp.drain(
+            rp.source("event_id long, ts timestamp, user_id long, event_type string")
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
 
         twin = attribute(
             ev.filter(F.col("event_type") == "purchase"),
@@ -2884,9 +2435,6 @@ def x3_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # -------------------------------------------- streaming Markov matrix
@@ -2944,27 +2492,20 @@ def x3_stream_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type"
     )
 
-    tmp = scratch_dir("stream_markov_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        deliver = tmp + "/deliver"
+    with replay(spark, "stream_markov_") as rp:
         # two delivery slices (round 10, the 6f9375e precedent): the
         # cross-batch boundary-transition carry needs >= 2 batches, and
         # the redelivery plant below is its own third batch — more
         # slices add trigger overhead, not coverage
-        _write_time_ordered(ev, deliver, n=2)
+        rp.deliver_time_ordered(ev, n=2)
         # planted redelivery: 40 earliest events arrive AGAIN last
-        import time as _time
+        rp.deliver(
+            [spark.read.parquet(rp.path("data")).orderBy("ts", "event_id").limit(40)]
+        )
 
-        _time.sleep(0.05)
-        spark.read.parquet(deliver).orderBy("ts", "event_id").limit(
-            40
-        ).coalesce(1).write.mode("append").parquet(deliver)
-
-        state_dir = tmp + "/carry"
-        seen_dir = tmp + "/seen"
-        log_dir = tmp + "/deltas"
+        state_dir = rp.path("carry")
+        seen_dir = rp.path("seen")
+        log_dir = rp.path("deltas")
 
         def ingest(bdf, eid: int) -> None:
             from pyspark.sql.window import Window as W
@@ -2984,10 +2525,8 @@ def x3_stream_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
             except Exception:
                 try:
                     # redelivery batches may skip versions: latest wins
-                    import os as _os
-
                     versions = sorted(
-                        int(d[1:]) for d in _os.listdir(state_dir)
+                        int(d[1:]) for d in os.listdir(state_dir)
                         if d.startswith("v")
                     )
                     carry = ss.read.parquet(state_dir + f"/v{versions[-1]}")
@@ -3039,27 +2578,16 @@ def x3_stream_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
             # length even though the live state is one version. Keep the
             # newest two (current + the lookback the version-skip
             # fallback above reads); delete the rest.
-            import os as _os
-            import shutil as _sh
-
             versions = sorted(
-                int(d[1:]) for d in _os.listdir(state_dir) if d.startswith("v")
+                int(d[1:]) for d in os.listdir(state_dir) if d.startswith("v")
             )
             for v in versions[:-2]:
-                _sh.rmtree(state_dir + f"/v{v}", ignore_errors=True)
+                shutil.rmtree(state_dir + f"/v{v}", ignore_errors=True)
 
-        q = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(deliver)
+        rp.drain(
+            rp.source("event_id long, ts timestamp, user_id long, event_type string")
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
 
         trans = (
             spark.read.parquet(log_dir)
@@ -3080,9 +2608,6 @@ def x3_stream_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ----------------------------------------------- streaming skyline
@@ -3135,27 +2660,17 @@ def x3_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", "l_quantity", "l_extendedprice"
     )
 
-    tmp = scratch_dir("stream_sky_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        deliver = tmp + "/deliver"
+    with replay(spark, "stream_sky_") as rp:
         # entity-complete delivery: split by part-key RANGE, not time
-        import time as _time
-
         lo, hi = li.agg(F.min("l_partkey"), F.max("l_partkey")).first()
         # two entity-range slices (round 10, the 6f9375e precedent):
         # cross-batch frontier MERGE needs >= 2 deliveries; a third
         # slice re-runs the fold for coverage it already has
-        span = (hi - lo + 1) / 2
-        for i in range(2):
-            cond = F.col("l_partkey") >= lo + i * span
-            if i < 1:
-                cond = cond & (F.col("l_partkey") < lo + (i + 1) * span)
-            li.filter(cond).coalesce(1).write.mode("append").parquet(deliver)
-            _time.sleep(0.05)
+        mid = lo + (hi - lo + 1) / 2
+        key = F.col("l_partkey")
+        rp.deliver([li.filter((key >= lo) & (key < mid)), li.filter(key >= mid)])
 
-        frontier_dir = tmp + "/frontier"
+        frontier_dir = rp.path("frontier")
 
         def ingest(bdf, eid: int) -> None:
             ss = bdf.sparkSession
@@ -3175,23 +2690,13 @@ def x3_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 frontier_dir + f"/v{eid}"
             )
 
-        q = (
-            spark.readStream.schema(
-                "l_partkey long, l_quantity double, l_extendedprice double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(deliver)
+        rp.drain(
+            rp.source("l_partkey long, l_quantity double, l_extendedprice double")
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
-
-        import os as _os
 
         last = max(
-            int(d[1:]) for d in _os.listdir(frontier_dir) if d.startswith("v")
+            int(d[1:]) for d in os.listdir(frontier_dir) if d.startswith("v")
         )
         out = (
             spark.read.parquet(frontier_dir + f"/v{last}")
@@ -3199,9 +2704,6 @@ def x3_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _hll_batch_oracle_sql() -> str:
@@ -3276,30 +2778,20 @@ def x_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     is absorbed by algebra — exactly-once sketching from at-least-once
     delivery. In-loop LSM compaction folds the register log with
     fold="max" (same associative-semiring contract as bit_or)."""
-    import time as _time
-
     from ..operators import maintenance as _mt
     from ..operators import sketch as _sk
 
     events = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
     )
-    tmp = scratch_dir("stream_hll_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        deltas_dir = tmp + "/reg_deltas"
+    with replay(spark, "stream_hll_") as rp:
+        deltas_dir = rp.path("reg_deltas")
         spark.createDataFrame(
             [], "event_type string, bucket long, r int"
         ).write.parquet(deltas_dir)
 
-        part = F.col("event_id") % 3
-        for j in range(3):
-            d = events.filter(part == j)
-            if j == 2:  # planted cross-batch redelivery
-                d = d.unionByName(events.filter(part == 0))
-            d.coalesce(1).write.mode("append").parquet(tmp + "/deliver")
-            _time.sleep(0.05)
+        d0, d1, d2 = (events.filter(F.col("event_id") % 3 == j) for j in range(3))
+        rp.deliver([d0, d1, d2.unionByName(d0)])  # planted cross-batch redelivery
 
         def ingest(bdf, _eid: int) -> None:
             _sk.hll_registers(bdf, ["event_type"], "user_id").write.mode(
@@ -3311,18 +2803,10 @@ def x_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                     fold="max",
                 )
 
-        q = (
-            spark.readStream.schema(
-                "event_id long, event_type string, user_id long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp + "/deliver")
+        rp.drain(
+            rp.source("event_id long, event_type string, user_id long")
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", tmp + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
         )
-        _await_drained(q)
 
         merged = (
             spark.read.parquet(deltas_dir)
@@ -3346,9 +2830,6 @@ def x_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # x3_stream_funnel FULL oracle (round 9): the returned frame is the

@@ -1,20 +1,19 @@
-"""Kafka source/sink builders + Confluent wire-format helpers
-(SURVEY.md S5-S8, K1-K4).
+"""Confluent wire-format helpers and Kafka payload decoders
+(SURVEY.md S5-S7).
 
 The reference consumes four topic groups (consumers/server.py:55-87):
 Avro with Confluent framing (arrivals — regex multi-topic pattern S7 —
 and weather) and schemaless JSON (stations table, TURNSTILE_SUMMARY).
-Here each maps to a readStream + a decode transform; the decode
-transforms are pure DataFrame functions, so tests can run them on batch
-DataFrames of synthetic bytes without a broker.
+Each maps to a decode transform over the Kafka source schema; the
+transforms are pure DataFrame functions, so they run unchanged on the
+simulated broker's ``kafkasim`` stream (sources/kafka_sim.py, which
+also carries topic patterns, offsets and back-pressure) and on batch
+DataFrames of synthetic bytes in tests.
 
 Scale notes (100 TB design point):
   - framing strip + JSON parse are JVM Column expressions (codegen);
     the Avro fallback decode is an Arrow-batched mapInPandas, used only
     when the spark-avro jar is absent.
-  - `maxOffsetsPerTrigger` bounds micro-batch size for backfill replays
-    (X5); `minPartitions` can fan one hot topic-partition out to many
-    tasks.
 """
 
 from __future__ import annotations
@@ -22,7 +21,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -138,67 +137,3 @@ def decode_json_value(
     )
     first_field = schema.fields[0].name
     return parsed.filter(F.col(f"v.{first_field}").isNotNull()).select(*keep, "v.*")
-
-
-# ------------------------------------------------------------ read/write
-
-def read_stream(
-    spark: SparkSession,
-    bootstrap: str,
-    *,
-    subscribe: str | None = None,
-    subscribe_pattern: str | None = None,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-    min_partitions: int | None = None,
-) -> DataFrame:
-    """S5-S8: Kafka streaming source. ``subscribe_pattern`` is the S7
-    multi-topic fan-in; ``starting_offsets`` reproduces the reference's
-    forced seek-to-beginning on fresh starts (S8 — a fresh checkpoint
-    ≡ OFFSET_BEGINNING)."""
-    if (subscribe is None) == (subscribe_pattern is None):
-        raise ValueError("exactly one of subscribe / subscribe_pattern required")
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("startingOffsets", starting_offsets)
-        .option("failOnDataLoss", "false")
-    )
-    if subscribe:
-        reader = reader.option("subscribe", subscribe)
-    else:
-        reader = reader.option("subscribePattern", subscribe_pattern)
-    if max_offsets_per_trigger:
-        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    if min_partitions:
-        reader = reader.option("minPartitions", str(min_partitions))
-    return reader.load()
-
-
-def write_json_stream(
-    df: DataFrame,
-    bootstrap: str,
-    topic: str,
-    checkpoint: str,
-    *,
-    key_col: str | None = None,
-    output_mode: str = "update",
-    trigger_seconds: int | None = None,
-):
-    """K3/K4: changelog-style JSON sink. ``update`` output mode emits only
-    changed keys per micro-batch — the Faust-table / KSQL-changelog analog.
-    Returns the started StreamingQuery."""
-    cols = [F.to_json(F.struct(*df.columns)).alias("value")]
-    if key_col:
-        cols.insert(0, F.col(key_col).cast("string").alias("key"))
-    writer = (
-        df.select(*cols)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -4,8 +4,8 @@ queries in one SparkSession.
 
 Tests replay parquet fixtures through a file source so the streaming
 results must equal the batch results on identical input (SURVEY section
-5.2 parity rule). In production the sources swap to Kafka (sources/
-kafka_io.py) without touching the view logic.
+5.2 parity rule). Fed from a broker instead (the ``kafkasim`` source,
+sources/kafka_sim.py), the view logic is unchanged.
 
 State-bounding stance (X2): the reference's KSQL/Faust state grows with
 key cardinality (~111 stations — fine). The same queries at 100 TB key

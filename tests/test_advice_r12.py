@@ -1,4 +1,4 @@
-"""Round-12 ADVICE closures (VERDICT r11 #4): four low-grade latent
+"""Round-12 ADVICE closures (VERDICT r11 #4): low-grade latent
 risks, each pinned by the test that would catch the silent split it
 protects against.
 
@@ -13,12 +13,7 @@ protects against.
    — the claim the membership docstring makes is now a committed test,
    so a constant edited on one side can no longer desynchronize the
    e4_contamination_bloom oracle silently.
-3. Sliding-top-k eviction boundary: the oracle closes windows with
-   `w_end <= max_ts - 2h` (INCLUSIVE). The corpus fixture never lands
-   a window exactly on the boundary, so the inclusivity was untested;
-   this fixture does, and pins Spark's append-mode emission to the
-   same rule.
-4. SemDeDup magnitude guard: components >= 2^23 must raise (the
+3. SemDeDup magnitude guard: components >= 2^23 must raise (the
    int64/float64 exactness bounds in greedy_keep_int_reference), not
    silently desynchronize the kernel from the DuckDB DOUBLE replay.
 """
@@ -81,55 +76,7 @@ def test_splitmix_sql_matches_numpy_kernel_on_boundary_keys():
             assert int(got) == int(exp), (k, j, got, int(exp))
 
 
-# ------------------------------------- 3. sliding top-k eviction boundary
-def test_sliding_window_eviction_boundary_is_inclusive(spark, tmp_path):
-    """A window whose end lands EXACTLY at (max event time - watermark
-    delay) must be emitted by the append-mode stream — the `<=` the
-    x_stream_sliding_topk oracle assumes."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from public_transit_status_with_apache_kafka_spark.plans.streaming_queries import (
-        _await_drained,
-        _write_time_ordered,
-    )
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [(base + dt.timedelta(hours=hh), "t%d" % (hh % 2), 1.0) for hh in range(7)]
-    ev = spark.createDataFrame(rows, "ts timestamp, event_type string, value double")
-    data = str(tmp_path / "data")
-    _write_time_ordered(ev, data, n=2)
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data)
-    )
-    agg = (
-        src.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "2 hours", "1 hour"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("window.end").alias("w_end"), "n")
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("adv_sliding_boundary")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(q)
-    emitted = {r.w_end for r in spark.table("adv_sliding_boundary").collect()}
-    # max ts = 06:00, watermark = 04:00; the [02:00, 04:00) window ends
-    # exactly ON the watermark: inclusive eviction emits it
-    boundary = base + dt.timedelta(hours=4)
-    after = base + dt.timedelta(hours=5)
-    assert boundary in emitted, sorted(emitted)
-    assert after not in emitted, sorted(emitted)
-
-
-# ------------------------------------------- 4. semdedup magnitude guard
+# ------------------------------------------- 3. semdedup magnitude guard
 def test_semdedup_int_kernel_rejects_overmagnitude_components():
     from public_transit_status_with_apache_kafka_spark.operators import semdedup
 

@@ -90,3 +90,32 @@ def test_no_cartesian_row_udf_or_unpartitioned_window_in_any_plan(spark):
         f"per-table scan budget ({MAX_SCANS_PER_TABLE}) exceeded — "
         f"localCheckpoint the shared frame: {rescans}"
     )
+
+
+# stream set-up lives in streaming/harness.py; a plan module that spells
+# any of these again has grown its own replay loop (or a second delivery
+# mechanism next to the harness's ordered mtimes)
+REPLAY_PLUMBING = (
+    "checkpointLocation",
+    "maxFilesPerTrigger",
+    "trigger(availableNow",
+    "time.sleep(",
+    'conf.get("spark.sql.shuffle.partitions")',
+)
+
+
+def test_no_hand_rolled_stream_replay_in_plans():
+    from pathlib import Path
+
+    from public_transit_status_with_apache_kafka_spark import plans
+
+    files = sorted(Path(plans.__file__).parent.glob("*.py"))
+    assert len(files) > 10
+    hits = [
+        f"{f.name}:{n}: {pat}"
+        for f in files
+        for n, line in enumerate(f.read_text().splitlines(), 1)
+        for pat in REPLAY_PLUMBING
+        if pat in line
+    ]
+    assert not hits, "use streaming/harness.py instead:\n" + "\n".join(hits)
