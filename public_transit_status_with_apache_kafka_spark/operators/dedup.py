@@ -195,7 +195,7 @@ def minhash_signatures_arrow(
     split; output is one row per doc) and is bit-identical — property
     tests pin kernel == expression form == DuckDB oracle, so either
     implementation can serve the registered query interchangeably."""
-    from ..functions.hashing import HEX_DIGITS, MINHASH_P, minhash_params
+    from ..functions.hashing import MINHASH_P, minhash_params
 
     params = minhash_params(n_hashes)
     out_schema = ", ".join(
@@ -246,7 +246,6 @@ def shingle_hashes_arrow(
     mapInPandas pass instead of interpreted HOF md5 per gram).
     Bit-identical to the expression form (equality-tested); shuffle-free
     until the caller aggregates/joins."""
-    from ..functions.hashing import HEX_DIGITS
 
     out_schema = f"id {dict(df.dtypes)[id_col]}, sh long"
     if spread:  # single-file local inputs: see winnowing_fingerprints_arrow
@@ -680,7 +679,6 @@ def simhash_arrow(
     but computed entirely inside one mapInPandas kernel — no explode, no
     groupBy shuffle at all (each document's votes are local to its
     split). Property tests pin kernel == expression form."""
-    from ..functions.hashing import HEX_DIGITS
 
     out_schema = f"id {dict(df.dtypes)[id_col]}, simhash long"
     if spread:  # single-file local inputs: see winnowing_fingerprints_arrow

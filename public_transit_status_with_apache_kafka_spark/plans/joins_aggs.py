@@ -653,7 +653,6 @@ def x_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE skew thresholds; exact percentile kept so the oracle
     hash-matches (swap in approx_percentile at scale, as
     x_approx_percentiles demonstrates)."""
-    from pyspark.sql.window import Window
 
     kc = load(spark, sf_dir, "orders").groupBy(
         F.col("o_custkey").alias("key")
@@ -1557,7 +1556,6 @@ def bucketed_tables(spark: SparkSession, sf_dir: str, n_buckets: int = 8):
     only materializes bucket metadata through saveAsTable."""
     import os
     import shutil
-    import tempfile
 
     tmp = scratch_dir("bucketed_")
     tag = os.path.basename(tmp).removeprefix("bucketed_")

@@ -60,7 +60,6 @@ def x_mvcc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Compaction of the fold into a new base is x_compact_small_files
     composed over the log. Oracle rebuilds the identical log in SQL."""
     import shutil
-    import tempfile
 
     o = load(spark, sf_dir, "orders")
     deltas = (
@@ -149,7 +148,6 @@ def x_manifest_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 20-value range over range-clustered files touches O(range) files
     regardless of corpus size. Oracle: the plain filtered aggregate."""
     import shutil
-    import tempfile
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id")
     lo, hi = 40, 59
@@ -212,7 +210,6 @@ def x_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single read site. Column pruning and pushdown still reach both
     file generations (shared columns prune normally)."""
     import shutil
-    import tempfile
 
     o = load(spark, sf_dir, "orders")
     tmp = scratch_dir("schema_evo_")
@@ -273,7 +270,6 @@ def x_bloom_file_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read must reproduce exactly. Pruning evidence (files read <=
     |keys| << files written) is pinned in tests/test_lakehouse.py."""
     import shutil
-    import tempfile
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id")
     tmp = scratch_dir("bloomidx_")
@@ -372,7 +368,6 @@ def x_positional_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable. No data file is rewritten; the oracle is the
     logically-equivalent filtered aggregate."""
     import shutil
-    import tempfile
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"

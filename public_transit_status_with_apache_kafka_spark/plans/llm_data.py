@@ -523,7 +523,6 @@ ORACLE["e2_lsh_pairs_salted"] = ORACLE["e2_lsh_pairs_salted"].replace(
 )
 def e2_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2/E4: exact n-gram Jaccard, top-20 most-similar pairs."""
-    from pyspark.sql.window import Window
 
     sh = _shared_sh(spark, sf_dir)
     pairs = dedup.jaccard_pairs(sh, max_df=MAX_DF)
@@ -706,7 +705,6 @@ def e2_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quoted inside a long one scores ~1 here but near-0 Jaccard). Same
     DF-capped hashed-key skeleton as e2_jaccard_topk
     (operators/dedup.py:containment_pairs)."""
-    from pyspark.sql.window import Window
 
     sh = _shared_sh(spark, sf_dir)
     pairs = dedup.containment_pairs(sh, max_df=MAX_DF)
@@ -3614,7 +3612,6 @@ def x_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys but not cardinality), which is exactly why the sketch variant
     exists. TakeOrderedAndProject handles the top-10, not a global
     sort."""
-    from pyspark.sql.window import Window
 
     toks = load(spark, sf_dir, "documents").select(
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok")
@@ -4748,9 +4745,6 @@ _PAIR_FRONT_SHARED: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 #    Exceeding it evicts the least-recently-USED entry; the next
 #    consumer of an evicted kind recomputes (fall back to recompute,
 #    never a stale read — the fingerprint check still applies).
-#  - $SPARK_GRAFT_FRONT_CAP_BYTES (default 8 GiB): when the block
-#    manager reports more persisted bytes than this at pin time, the
-#    memo sheds LRU entries down to the most recent one before pinning.
 #
 # Eviction only drops THIS dict's reference. It never unpersists blocks
 # under a live consumer plan: a consumer DataFrame built against the
@@ -4759,19 +4753,6 @@ _PAIR_FRONT_SHARED: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 # such plan is itself garbage-collected.
 _FRONT_DISABLE_ENV = "SPARK_GRAFT_NO_SHARED_FRONTS"
 _FRONT_CAP_ENV = "SPARK_GRAFT_FRONT_CAP"
-_FRONT_CAP_BYTES_ENV = "SPARK_GRAFT_FRONT_CAP_BYTES"
-_FRONT_CAP_BYTES_DEFAULT = 8 << 30
-
-
-def _pinned_storage_bytes(spark: SparkSession) -> int:
-    """Total bytes the block manager holds for persisted/checkpointed
-    RDDs (memory + disk). A superset of the memo's own pins — used only
-    as a pressure signal, never for per-entry accounting."""
-    try:
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return int(sum(i.memSize() + i.diskSize() for i in infos))
-    except Exception:
-        return 0
 
 
 def _fixture_fingerprint(sf_dir: str) -> tuple:
@@ -4806,7 +4787,7 @@ def _shared_frame(spark: SparkSession, sf_dir: str, kind: str, builder):
     Round 13: the two queries whose entire BODY is a front
     (e2_minhash_signatures, e2_lsh_candidate_pairs) no longer serve
     from this memo — see their docstrings — and the memo is governed:
-    off-switch, LRU entry cap, byte-pressure shed (_FRONT_* above)."""
+    off-switch and LRU entry cap (_FRONT_* above)."""
     import os as _os
 
     if _os.environ.get(_FRONT_DISABLE_ENV, "0") not in ("", "0"):
@@ -4821,12 +4802,6 @@ def _shared_frame(spark: SparkSession, sf_dir: str, kind: str, builder):
         cap = max(1, int(_os.environ.get(_FRONT_CAP_ENV, "8")))
         while len(per_session) >= cap:
             per_session.popitem(last=False)  # LRU out; next use recomputes
-        cap_bytes = int(
-            _os.environ.get(_FRONT_CAP_BYTES_ENV, str(_FRONT_CAP_BYTES_DEFAULT))
-        )
-        if per_session and _pinned_storage_bytes(spark) > cap_bytes:
-            while len(per_session) > 1:
-                per_session.popitem(last=False)
         per_session[(path, kind)] = (fp, builder())
         ent = per_session[(path, kind)]
     else:
@@ -5126,7 +5101,6 @@ def e6_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     production would window per shard and hash-thin the same way, the
     e6_weighted_sample stance), and the anti-join's right side is the
     positive set (small). Labels unioned, one output."""
-    from ..operators import dedup
 
     docs = load(spark, sf_dir, "documents")
     pos = _shared_lsh_pairs(spark, sf_dir).select("id_a", "id_b")

@@ -1110,7 +1110,6 @@ def s10_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     originals — one corrupted byte anywhere in the writer, the framing,
     or the parser flips the checksum."""
     import shutil
-    import tempfile
 
     from ..sources import warc
 
@@ -1597,7 +1596,6 @@ def e4_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (x_group_regression): ln values floored to micro-nats, moment sums
     in DECIMAL(38,0)/HUGEINT, one ratio_round_big per coefficient —
     hash-identical in both engines. Output is ONE row."""
-    from pyspark.sql.window import Window as W
 
     docs = load(spark, sf_dir, "documents")
     vocab = (

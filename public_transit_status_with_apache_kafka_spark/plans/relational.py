@@ -66,7 +66,6 @@ def s1_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the ``finally``, so the result must be materialized before return.
     The collected result is bounded (one row per language)."""
     import shutil
-    import tempfile
 
     from ..functions.hashing import md5_long
 
@@ -120,7 +119,6 @@ def s1_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Eager like the CSV twin: tempdir removed in ``finally``, result is
     one row per source."""
     import shutil
-    import tempfile
 
     from ..functions.hashing import md5_long
 
@@ -167,7 +165,6 @@ def s1_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Eager like the CSV twin: tempdir removed in ``finally``, result is
     one row per source."""
     import shutil
-    import tempfile
 
     from ..functions.hashing import md5_long
 
@@ -211,7 +208,6 @@ def x_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     Eager like the format round-trips: tempdirs removed in ``finally``,
     result is one row per source."""
     import shutil
-    import tempfile
 
     from ..functions.hashing import md5_long
     from ..operators import maintenance

@@ -11,12 +11,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.rounding import (
+    ratio_round,
+    ratio_round_big,
+    ratio_round_big_sql,
+    ratio_round_sql,
+)
 from ..io_util import load
 from . import register_into
 
 QUERIES = {}
 ORACLE = {}
 _register = register_into(QUERIES, ORACLE)
+
+# Discounted revenue in exact integer units of 1/10000: cents x (100 -
+# discount percent). A double sum of price * (1 - discount) can land on a
+# half cent that Spark (HALF_UP on the shortest decimal string) and
+# DuckDB (the binary value) round apart; the integer sum rounds the same
+# in both through functions/rounding.
+_REV_UNITS_SQL = (
+    "CAST(round(l_extendedprice * 100) AS BIGINT)"
+    " * (100 - CAST(round(l_discount * 100) AS BIGINT))"
+)
+
+
+def _rev_units():
+    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    return cents * (100 - F.round(F.col("l_discount") * 100).cast("long"))
 
 
 @_register(
@@ -56,8 +77,9 @@ def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q3_shipping_priority",
-    sql="""
-    SELECT o_orderkey, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+    sql=f"""
+    SELECT o_orderkey,
+           {ratio_round_sql(f"sum({_REV_UNITS_SQL})", "10000", 2)} AS revenue,
            strftime(o_orderdate, '%Y-%m-%d') AS orderdate, o_orderpriority
     FROM customer JOIN orders ON c_custkey = o_custkey
                   JOIN lineitem ON l_orderkey = o_orderkey
@@ -65,7 +87,7 @@ def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o_orderdate < TIMESTAMP '1998-03-15'
       AND l_shipdate > TIMESTAMP '1998-03-15'
     GROUP BY o_orderkey, o_orderdate, o_orderpriority
-    ORDER BY sum(l_extendedprice * (1 - l_discount)) DESC, o_orderkey
+    ORDER BY sum({_REV_UNITS_SQL}) DESC, o_orderkey
     LIMIT 10
     """,
 )
@@ -76,17 +98,16 @@ def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1998-03-15"))
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1998-03-15"))
-    revenue = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(revenue.alias("_rev"))
+        .agg(F.sum(_rev_units()).alias("_rev"))
         .orderBy(F.desc("_rev"), F.asc("o_orderkey"))
         .limit(10)
         .select(
             "o_orderkey",
-            F.round("_rev", 2).alias("revenue"),
+            ratio_round(F.col("_rev"), F.lit(10000), 2).alias("revenue"),
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
             "o_orderpriority",
         )
@@ -95,8 +116,9 @@ def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "q5_local_supplier_volume",
-    sql="""
-    SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    sql=f"""
+    SELECT n_name,
+           {ratio_round_big_sql(f"sum({_REV_UNITS_SQL})", "10000", 2)} AS revenue
     FROM region
       JOIN nation   ON n_regionkey = r_regionkey
       JOIN customer ON c_nationkey = n_nationkey
@@ -130,8 +152,9 @@ def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     )
+    # per-nation sums pass ratio_round's 2^53 input bound by sf1
     return joined.groupBy("n_name").agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
+        ratio_round_big(F.sum(_rev_units()), F.lit(10000), 2).alias("revenue")
     )
 
 

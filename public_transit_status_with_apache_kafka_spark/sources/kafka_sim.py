@@ -31,13 +31,16 @@ Appends create new segments, never rewrite — offsets are stable, so a
 re-read at a given offset range is deterministic (the property every
 delivery-semantics test leans on).
 
-Partitioner: explicit partition wins; else hash(key) % n; else
-round-robin. The keyed hash is crc32 by default (zlib.crc32 ==
-java.util.zip.CRC32, so the Spark-side `F.crc32` expression places
-records identically), with `partitioner="murmur2"` selecting Kafka's
-real default — toPositive(murmur2(key)) % n, implemented from the
-public algorithm (Austin Appleby's MurmurHash2, seed 0x9747b28c) and
-pinned against the published Java-compatibility vectors.
+Records reach the log two ways: `SimBroker.produce` (driver-side, the
+producer client) and the `kafkasim` sink (`df.write` /
+`writeStream.format("kafkasim")`, executors stage segments that the
+driver commits). Both place records with one rule (`_place`): explicit
+partition wins; else hash(key) % n; else round-robin over the unkeyed
+records. The keyed hash is crc32 by default (zlib.crc32), with
+`partitioner="murmur2"` selecting Kafka's real default —
+toPositive(murmur2(key)) % n, implemented from the public algorithm
+(Austin Appleby's MurmurHash2, seed 0x9747b28c) and pinned against the
+published Java-compatibility vectors.
 
 Everything here is built only on the public pyspark.sql.datasource API
 and pyarrow.
@@ -51,8 +54,6 @@ import os
 import re
 import zlib
 from dataclasses import dataclass
-
-import pandas as pd
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -112,7 +113,44 @@ def partition_for_key(key: bytes, n: int, partitioner: str = "crc32") -> int:
     return zlib.crc32(key) % n
 
 
+def _place(records, n_for, partitioner: str) -> dict[tuple[str, int], list]:
+    """Group (topic, partition, key, value, ts_ms) records into
+    {(topic, broker partition): [(key, value, ts_ms)]}: an explicit
+    partition wins; else a keyed record goes to partition_for_key; else
+    the unkeyed records of one call go round-robin. ``n_for(topic)`` is
+    the topic's partition count."""
+    buckets: dict[tuple[str, int], list] = {}
+    rr = 0
+    for t, part, k, v, ts in records:
+        if part is not None:
+            p = int(part)
+        elif k is not None:
+            p = partition_for_key(k, n_for(t), partitioner)
+        else:
+            p = rr % n_for(t)
+            rr += 1
+        buckets.setdefault((t, p), []).append((k, v, ts))
+    return buckets
+
+
 # --------------------------------------------------------------- broker log
+
+
+def _topics(log_dir: str) -> list[str]:
+    return sorted(
+        d for d in os.listdir(log_dir)
+        if not d.startswith(".") and os.path.isdir(os.path.join(log_dir, d))
+    )
+
+
+def _partitions(log_dir: str, topic: str) -> list[int]:
+    return sorted(
+        int(d) for d in os.listdir(os.path.join(log_dir, topic)) if d.isdigit()
+    )
+
+
+def _pdir(log_dir: str, topic: str, p: int) -> str:
+    return os.path.join(log_dir, topic, f"{p:04d}")
 
 
 class SimBroker:
@@ -133,22 +171,18 @@ class SimBroker:
     def create_topic(self, topic: str, n_partitions: int | None = None) -> None:
         n = n_partitions or self.default_partitions
         for p in range(n):
-            os.makedirs(os.path.join(self.log_dir, topic, f"{p:04d}"), exist_ok=True)
+            os.makedirs(_pdir(self.log_dir, topic, p), exist_ok=True)
 
     def topics(self) -> list[str]:
-        return sorted(
-            d for d in os.listdir(self.log_dir)
-            if not d.startswith(".") and os.path.isdir(os.path.join(self.log_dir, d))
-        )
+        return _topics(self.log_dir)
 
     def n_partitions(self, topic: str) -> int:
-        tdir = os.path.join(self.log_dir, topic)
-        return len([d for d in os.listdir(tdir) if d.isdigit()])
+        return len(_partitions(self.log_dir, topic))
 
     def end_offsets(self, topic: str) -> dict[int, int]:
         return {
-            p: _segment_end(os.path.join(self.log_dir, topic, f"{p:04d}"))
-            for p in range(self.n_partitions(topic))
+            p: _segment_end(_pdir(self.log_dir, topic, p))
+            for p in _partitions(self.log_dir, topic)
         }
 
     # -- produce -----------------------------------------------------------
@@ -158,23 +192,18 @@ class SimBroker:
         records: list[tuple[bytes | None, bytes, int]],
         partition: int | None = None,
     ) -> None:
-        """Append (key, value, ts_ms) records. Explicit partition wins;
-        keyed records hash-partition (crc32 or murmur2 per the broker's
-        partitioner); unkeyed round-robin."""
+        """Append (key, value, ts_ms) records, placed by `_place` with
+        the broker's partitioner."""
         if topic not in self.topics():
             self.create_topic(topic)
         n = self.n_partitions(topic)
-        per_part: dict[int, list] = {}
-        for i, (k, v, ts) in enumerate(records):
-            if partition is not None:
-                p = partition
-            elif k is not None:
-                p = partition_for_key(k, n, self.partitioner)
-            else:
-                p = i % n
-            per_part.setdefault(p, []).append((k, v, ts))
-        for p, rows in per_part.items():
-            pdir = os.path.join(self.log_dir, topic, f"{p:04d}")
+        buckets = _place(
+            ((topic, partition, k, v, ts) for k, v, ts in records),
+            lambda _t: n,
+            self.partitioner,
+        )
+        for (_t, p), rows in buckets.items():
+            pdir = _pdir(self.log_dir, topic, p)
             _write_segment(pdir, _segment_end(pdir), rows)
 
 
@@ -336,28 +365,34 @@ class TopicEnsurer:
         cache.add(topic)
 
 
-def _write_segment(
-    pdir: str, base: int, rows: list[tuple[bytes | None, bytes, int]]
-) -> None:
-    """Atomically write one segment at the given base offset: tmp file +
-    rename, so readers (whose segment regex ignores tmp names) never see
-    a torn file, and a task RETRY of the same pre-assigned (segment,
-    rows) is idempotent — same filename, same content, last rename
-    wins."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _segment_path(pdir: str, base: int) -> str:
+    return os.path.join(pdir, f"{base:012d}.parquet")
 
-    os.makedirs(pdir, exist_ok=True)
-    tbl = pa.table(
+
+def _segment_table(rows: list[tuple[bytes | None, bytes, int]]):
+    import pyarrow as pa
+
+    return pa.table(
         {
             "key": pa.array([r[0] for r in rows], pa.binary()),
             "value": pa.array([r[1] for r in rows], pa.binary()),
             "ts_ms": pa.array([r[2] for r in rows], pa.int64()),
         }
     )
-    path = os.path.join(pdir, f"{base:012d}.parquet")
+
+
+def _write_segment(
+    pdir: str, base: int, rows: list[tuple[bytes | None, bytes, int]]
+) -> None:
+    """Atomically write one segment at the given base offset: tmp file +
+    rename, so readers (whose segment regex ignores tmp names) never see
+    a torn file."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(pdir, exist_ok=True)
+    path = _segment_path(pdir, base)
     tmp = f"{path}.tmp-{os.getpid()}"
-    pq.write_table(tbl, tmp)
+    pq.write_table(_segment_table(rows), tmp)
     os.replace(tmp, path)
 
 
@@ -419,11 +454,19 @@ def _read_slice(s: _Slice):
             )
 
 
+def _slices(log_dir: str, start: dict, end: dict) -> list[_Slice]:
+    """One slice per topic-partition with records in [start, end)."""
+    out = []
+    for t, ends in end.items():
+        for p, hi in ends.items():
+            lo = start.get(t, {}).get(p, 0)
+            if hi > lo:
+                out.append(_Slice(t, int(p), _pdir(log_dir, t, int(p)), lo, hi))
+    return out
+
+
 def _selected_topics(log_dir: str, options: dict) -> list[str]:
-    topics = sorted(
-        d for d in os.listdir(log_dir)
-        if not d.startswith(".") and os.path.isdir(os.path.join(log_dir, d))
-    )
+    topics = _topics(log_dir)
     if options.get("subscribe"):
         want = {t.strip() for t in options["subscribe"].split(",")}
         missing = want - set(topics)
@@ -437,15 +480,13 @@ def _selected_topics(log_dir: str, options: dict) -> list[str]:
 
 
 def _disk_offsets(log_dir: str, topics: list[str]) -> dict[str, dict[str, int]]:
-    out: dict[str, dict[str, int]] = {}
-    for t in topics:
-        tdir = os.path.join(log_dir, t)
-        out[t] = {
-            d.lstrip("0") or "0": _segment_end(os.path.join(tdir, d))
-            for d in sorted(os.listdir(tdir))
-            if d.isdigit()
+    return {
+        t: {
+            str(p): _segment_end(_pdir(log_dir, t, p))
+            for p in _partitions(log_dir, t)
         }
-    return out
+        for t in topics
+    }
 
 
 def _starting_offsets(
@@ -491,13 +532,7 @@ class KafkaSimBatchReader(DataSourceReader):
                 }
                 for t in topics
             }
-        return [
-            _Slice(t, int(p), os.path.join(self.log_dir, t, f"{int(p):04d}"),
-                   start[t][p], end[t][p])
-            for t in topics
-            for p in disk[t]
-            if end[t][p] > start[t][p]
-        ]
+        return _slices(self.log_dir, start, end)
 
     def read(self, partition: _Slice):
         return _read_slice(partition)
@@ -573,13 +608,7 @@ class KafkaSimStreamReader(DataSourceStreamReader):
             # the checkpointed start is authoritative: floor the ramp so
             # a restart never plans an end behind the committed offset
             self._last_end = self._floor(self._last_end or {}, start)
-        return [
-            _Slice(t, int(p), os.path.join(self.log_dir, t, f"{int(p):04d}"),
-                   start.get(t, {}).get(p, 0), end[t][p])
-            for t in end
-            for p in end[t]
-            if end[t][p] > start.get(t, {}).get(p, 0)
-        ]
+        return _slices(self.log_dir, start, end)
 
     def read(self, partition: _Slice):
         return _read_slice(partition)
@@ -667,71 +696,52 @@ class KafkaSimWriter(DataSourceArrowWriter):
     def _n_for(self, topic: str) -> int:
         return self.topic_parts.get(topic, self.default_partitions)
 
+    def _records(self, batches):
+        """(topic, partition, key, value, ts_ms) per row of the task's
+        Arrow batches; absent columns mean the `topic` option, no
+        explicit partition, no key and ts 0."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            names, n_rows = batch.schema.names, batch.num_rows
+
+            def col(c, default):
+                if c in names:
+                    return batch.column(names.index(c)).to_pylist()
+                return [default] * n_rows
+
+            if "timestamp" in names and "ts_ms" not in names:
+                tss = pc.cast(
+                    batch.column(names.index("timestamp")), pa.timestamp("ms")
+                ).cast(pa.int64()).to_pylist()
+            else:
+                tss = col("ts_ms", 0)
+            for t, p, k, v, ts in zip(
+                col("topic", self.topic), col("partition", None),
+                col("key", None), col("value", None), tss,
+            ):
+                yield (
+                    t, p, bytes(k) if k is not None else None, bytes(v),
+                    int(ts) if ts is not None else 0,
+                )
+
     def write(self, iterator) -> _StagedSegments:
         import uuid
 
-        import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
         seq = ctx.partitionId() if ctx is not None else 0
-        buckets: dict[tuple[str, int], list] = {}
-        rr = 0
-        for batch in iterator:
-            names = batch.schema.names
-            n_rows = batch.num_rows
-            if n_rows == 0:
-                continue
-            col = lambda c: (  # noqa: E731
-                batch.column(names.index(c)).to_pylist() if c in names else None
-            )
-            keys = col("key") or [None] * n_rows
-            vals = col("value")
-            topics = col("topic") or [self.topic] * n_rows
-            parts = col("partition") or [None] * n_rows
-            if "ts_ms" in names:
-                tss = col("ts_ms")
-            elif "timestamp" in names:
-                import pyarrow.compute as pc
-
-                tss = pc.cast(
-                    batch.column(names.index("timestamp")),
-                    pa.timestamp("ms"),
-                ).cast(pa.int64()).to_pylist()
-            else:
-                tss = [0] * n_rows
-            for i in range(n_rows):
-                t = topics[i]
-                n = self._n_for(t)
-                if parts[i] is not None:
-                    p = int(parts[i])
-                elif keys[i] is not None:
-                    p = partition_for_key(bytes(keys[i]), n, self.partitioner)
-                else:
-                    p = rr % n
-                    rr += 1
-                buckets.setdefault((t, p), []).append(
-                    (
-                        bytes(keys[i]) if keys[i] is not None else None,
-                        bytes(vals[i]),
-                        int(tss[i]) if tss[i] is not None else 0,
-                    )
-                )
+        buckets = _place(self._records(iterator), self._n_for, self.partitioner)
         os.makedirs(self.stage_dir, exist_ok=True)
         segments = []
         for (t, p), rows in sorted(buckets.items()):
             path = os.path.join(
                 self.stage_dir, f"{uuid.uuid4().hex}-{t}-{p:04d}.parquet"
             )
-            tbl = pa.table(
-                {
-                    "key": pa.array([r[0] for r in rows], pa.binary()),
-                    "value": pa.array([r[1] for r in rows], pa.binary()),
-                    "ts_ms": pa.array([r[2] for r in rows], pa.int64()),
-                }
-            )
-            pq.write_table(tbl, path)
+            pq.write_table(_segment_table(rows), path)
             segments.append((t, p, path, len(rows)))
         return _StagedSegments(seq=seq, segments=segments)
 
@@ -748,12 +758,12 @@ class KafkaSimWriter(DataSourceArrowWriter):
             (m for m in messages if m is not None), key=lambda m: m.seq
         ):
             for t, p, path, n_rows in msg.segments:
-                pdir = os.path.join(self.log_dir, t, f"{p:04d}")
+                pdir = _pdir(self.log_dir, t, p)
                 os.makedirs(pdir, exist_ok=True)
                 if (t, p) not in ends:
                     ends[(t, p)] = _segment_end(pdir)
                 base = ends[(t, p)]
-                os.replace(path, os.path.join(pdir, f"{base:012d}.parquet"))
+                os.replace(path, _segment_path(pdir, base))
                 ends[(t, p)] = base + n_rows
                 published += n_rows
         shutil.rmtree(self.stage_dir, ignore_errors=True)
@@ -847,136 +857,3 @@ class KafkaSimDataSource(DataSource):
 def register(spark) -> None:
     """Idempotent per-session registration of the kafkasim format."""
     spark.dataSource.register(KafkaSimDataSource)
-
-
-def distributed_produce(
-    df, log_dir: str, topic: str, partitioner: str = "crc32"
-) -> int:
-    """Distributed K1 write path: produce a (batch) DataFrame onto a
-    broker topic WITHOUT funnelling records through the driver.
-
-    Three steps, mirroring how a real producer fleet appends to a
-    partitioned log:
-
-    1. **Assign** (executor-side, codegen): each record gets its broker
-       partition — explicit `partition` column wins, else hash(key) % n
-       (`F.crc32` matches zlib/java CRC32 bit-for-bit; murmur2 via a
-       vectorized pandas UDF), else a round-robin-style spread from
-       `monotonically_increasing_id() % n`. The frame is persisted so
-       the assignment (and row order) is identical across both passes.
-    2. **Reserve** (driver-side, METADATA ONLY): `groupBy(spark_part,
-       broker_part).count()` collects at most n_tasks x n_partitions
-       counts — never records — and the driver pre-assigns each
-       (spark partition, broker partition) pair a contiguous base
-       offset, spark-partition-ascending on top of the current end
-       offsets. This is the single-writer moment, and it is O(tasks).
-    3. **Append** (executor-side): `foreachPartition` writes one
-       segment per broker partition it holds at its reserved base —
-       the append-only `{base:012d}.parquet` layout makes concurrent
-       segment files from different executors safe, and the atomic
-       tmp+rename write makes task retries idempotent (same reserved
-       base -> same filename and bytes).
-
-    Returns the number of records produced. Concurrent producers to the
-    same topic still need external serialization (per streaming query,
-    foreachBatch already provides it) — same contract as before, but
-    the data path now scales with executors instead of driver NIC."""
-    from pyspark.sql import functions as F
-
-    cols = set(df.columns)
-    work = df
-    if "key" not in cols:
-        work = work.withColumn("key", F.lit(None).cast("binary"))
-    ts = (
-        F.unix_millis(F.col("timestamp"))
-        if "timestamp" in cols
-        else F.lit(0).cast("long")
-    )
-
-    broker = SimBroker(log_dir, partitioner=partitioner)
-    if topic not in broker.topics():
-        broker.create_topic(topic)
-    n = broker.n_partitions(topic)
-
-    if partitioner == "murmur2":
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("int")
-        def _keyed(keys: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    (murmur2(bytes(k)) & 0x7FFFFFFF) % n if k is not None else 0
-                    for k in keys
-                ],
-                dtype="int32",
-            )
-
-        keyed = _keyed(F.col("key"))
-    else:
-        keyed = F.pmod(F.crc32(F.col("key")), F.lit(n)).cast("int")
-    unkeyed = F.pmod(F.monotonically_increasing_id(), F.lit(n)).cast("int")
-    bpart = F.when(F.col("key").isNotNull(), keyed).otherwise(unkeyed)
-    if "partition" in cols:
-        bpart = F.coalesce(F.col("partition").cast("int"), bpart)
-    work = (
-        work.select(
-            F.col("key").cast("binary").alias("key"),
-            F.col("value").cast("binary").alias("value"),
-            ts.alias("ts_ms"),
-            bpart.alias("bpart"),
-        )
-        .withColumn("spid", F.spark_partition_id())
-        .persist()
-    )
-    try:
-        counts = work.groupBy("spid", "bpart").count().collect()
-        if not counts:
-            return 0
-        ends = broker.end_offsets(topic)
-        bases: dict[tuple[int, int], int] = {}
-        produced = 0
-        for spid, bp, cnt in sorted(
-            (int(r["spid"]), int(r["bpart"]), int(r["count"])) for r in counts
-        ):
-            bases[(spid, bp)] = ends.get(bp, 0)
-            ends[bp] = ends.get(bp, 0) + cnt
-            produced += cnt
-
-        def _append(rows_iter) -> None:
-            groups: dict[tuple[int, int], list] = {}
-            for r in rows_iter:
-                groups.setdefault((r.spid, r.bpart), []).append(
-                    (
-                        bytes(r.key) if r.key is not None else None,
-                        bytes(r.value),
-                        int(r.ts_ms),
-                    )
-                )
-            for (spid, bp), rows in groups.items():
-                _write_segment(
-                    os.path.join(log_dir, topic, f"{bp:04d}"),
-                    bases[(spid, bp)],
-                    rows,
-                )
-
-        work.foreachPartition(_append)
-        return produced
-    finally:
-        work.unpersist()
-
-
-def foreach_batch_producer(log_dir: str, topic: str, partitioner: str = "crc32"):
-    """K1 write path: a foreachBatch function producing each micro-batch
-    onto a broker topic. Expects columns `key` (binary, nullable),
-    `value` (binary) and optionally `timestamp` (timestamp) / explicit
-    `partition` — the same contract as the real Kafka sink. Records
-    land append-only with broker-assigned contiguous offsets, exactly
-    like a producer send; the write itself runs on executors via
-    :func:`distributed_produce` (the driver only reserves base
-    offsets), so produce throughput scales with the cluster instead of
-    capping at driver collect bandwidth."""
-
-    def _produce(df, _epoch_id: int) -> None:
-        distributed_produce(df, log_dir, topic, partitioner=partitioner)
-
-    return _produce

@@ -237,7 +237,7 @@ def test_produce_transform_produce_consume_chain(spark, tmp_path):
     """K1 against the broker: the reference's produce->transform->
     produce->consume chain (faust_stream.py's topic-to-topic shape).
     A streaming query reads the raw topic, transforms, PRODUCES the
-    result onto an output topic via foreach_batch_producer; a second
+    result onto an output topic through the kafkasim sink; a second
     read of the output topic sees exactly the transformed records with
     broker-assigned offsets."""
     b = _mk_broker(tmp_path)
@@ -251,9 +251,9 @@ def test_produce_transform_produce_consume_chain(spark, tmp_path):
             "CAST(CONCAT(CAST(offset AS STRING), ':', topic) AS BINARY) AS value",
             "timestamp",
         )
-        .writeStream.foreachBatch(
-            kafka_sim.foreach_batch_producer(b.log_dir, "station.arrivals.out")
-        )
+        .writeStream.format("kafkasim")
+        .option("path", b.log_dir)
+        .option("topic", "station.arrivals.out")
         .option("checkpointLocation", str(tmp_path / "ckpt_chain"))
         .trigger(availableNow=True)
         .start()
@@ -352,21 +352,25 @@ def test_murmur2_matches_published_java_vectors():
 
 
 def test_murmur2_broker_and_distributed_placement_agree(spark, tmp_path):
-    """A murmur2 SimBroker and the distributed produce path place the
-    same keys on the same partitions (both = Kafka's default rule)."""
+    """A murmur2 SimBroker and the kafkasim sink (executor-side
+    placement) put the same keys on the same partitions (both = Kafka's
+    default rule)."""
     keys = [f"station-{i}".encode() for i in range(40)]
     b = kafka_sim.SimBroker(
         str(tmp_path / "log_b"), default_partitions=5, partitioner="murmur2"
     )
     b.produce("t", [(k, k, 0) for k in keys])
-    df = spark.createDataFrame(
-        [(k, k) for k in keys], "key binary, value binary"
-    ).repartition(6)
     kafka_sim.SimBroker(str(tmp_path / "log_d")).create_topic("t", 5)
-    kafka_sim.distributed_produce(
-        df, str(tmp_path / "log_d"), "t", partitioner="murmur2"
-    )
     kafka_sim.register(spark)
+    (
+        spark.createDataFrame([(k, k) for k in keys], "key binary, value binary")
+        .repartition(6)
+        .write.format("kafkasim")
+        .option("topic", "t")
+        .option("partitioner", "murmur2")
+        .mode("append")
+        .save(str(tmp_path / "log_d"))
+    )
 
     def placement(log):
         rows = spark.read.format("kafkasim").option("subscribe", "t").load(log).collect()
@@ -378,62 +382,24 @@ def test_murmur2_broker_and_distributed_placement_agree(spark, tmp_path):
         assert p == (kafka_sim.murmur2(k) & 0x7FFFFFFF) % 5
 
 
-def test_distributed_produce_contiguous_offsets_and_bytes(spark, tmp_path):
-    """Round-7 item #1: the produce path writes from EXECUTORS
-    (foreachPartition segments at driver-reserved base offsets), and
-    the result is indistinguishable from the single-writer log: per-
-    partition offsets contiguous from the prior end, consume bytes
-    identical to what was produced, keyed placement identical to
-    SimBroker.produce."""
-    log = str(tmp_path / "log")
-    b = kafka_sim.SimBroker(log, default_partitions=4)
-    # pre-existing records so reserved bases start above zero
-    b.produce("out", [(f"seed{i}".encode(), f"s{i}".encode(), 0) for i in range(7)])
-    pre_end = b.end_offsets("out")
-
-    rows = [(f"k{i}".encode(), f"v{i}".encode()) for i in range(200)]
-    df = spark.createDataFrame(rows, "key binary, value binary").repartition(8)
-    n = kafka_sim.distributed_produce(df, log, "out")
-    assert n == 200
-
-    kafka_sim.register(spark)
-    got = (
-        spark.read.format("kafkasim").option("subscribe", "out").load(log).collect()
-    )
-    assert len(got) == 207
-    # contiguous offsets per partition: 0..end-1 with no gaps
-    per_part = {}
-    for r in got:
-        per_part.setdefault(r.partition, []).append(r.offset)
-    assert sum(len(v) for v in per_part.values()) == 207
-    for p, offs in per_part.items():
-        assert sorted(offs) == list(range(len(offs))), f"gap in partition {p}"
-        assert len(offs) >= pre_end.get(p, 0)
-    # byte-identical consume: every produced (key, value) pair present once
-    new = {
-        bytes(r.key): bytes(r.value)
-        for r in got
-        if not bytes(r.key).startswith(b"seed")
-    }
-    assert new == {k: v for k, v in rows}
-    # keyed placement matches the single-writer broker rule (crc32)
-    import zlib
-
-    for r in got:
-        if not bytes(r.key).startswith(b"seed"):
-            assert r.partition == zlib.crc32(bytes(r.key)) % 4
-
-
-def test_distributed_produce_unkeyed_and_explicit_partition(spark, tmp_path):
-    """Unkeyed records spread across partitions (no single hot
-    partition); an explicit `partition` column is honored exactly."""
+def test_sink_unkeyed_and_explicit_partition(spark, tmp_path):
+    """Sink placement: unkeyed records spread across partitions (no
+    single hot partition); an explicit `partition` column is honored
+    exactly, over a key that hashes elsewhere."""
     log = str(tmp_path / "log")
     kafka_sim.SimBroker(log, default_partitions=3).create_topic("t")
-    unkeyed = spark.range(90).selectExpr(
-        "CAST(NULL AS BINARY) AS key", "CAST(CAST(id AS STRING) AS BINARY) AS value"
-    )
-    kafka_sim.distributed_produce(unkeyed, log, "t")
     kafka_sim.register(spark)
+
+    def produce(df, topic):
+        df.write.format("kafkasim").option("topic", topic).mode("append").save(log)
+
+    produce(
+        spark.range(90).selectExpr(
+            "CAST(NULL AS BINARY) AS key",
+            "CAST(CAST(id AS STRING) AS BINARY) AS value",
+        ),
+        "t",
+    )
     got = spark.read.format("kafkasim").option("subscribe", "t").load(log).collect()
     assert len(got) == 90
     by_part = {}
@@ -442,12 +408,15 @@ def test_distributed_produce_unkeyed_and_explicit_partition(spark, tmp_path):
         by_part[r.partition] += 1
     assert len(by_part) == 3 and max(by_part.values()) < 90
 
-    explicit = spark.range(10).selectExpr(
-        "CAST('k' AS BINARY) AS key",
-        "CAST('v' AS BINARY) AS value",
-        "CAST(2 AS INT) AS partition",
+    assert kafka_sim.partition_for_key(b"k", 3) != 2
+    produce(
+        spark.range(10).selectExpr(
+            "CAST('k' AS BINARY) AS key",
+            "CAST('v' AS BINARY) AS value",
+            "CAST(2 AS INT) AS partition",
+        ),
+        "t2",
     )
-    kafka_sim.distributed_produce(explicit, log, "t2")
     got2 = spark.read.format("kafkasim").option("subscribe", "t2").load(log).collect()
     assert len(got2) == 10 and {r.partition for r in got2} == {2}
 
@@ -726,6 +695,10 @@ def test_sink_streaming_end_to_end_chain(spark, tmp_path):
     readStream/writeStream formats."""
     log = str(tmp_path / "log")
     b = kafka_sim.SimBroker(log, default_partitions=3)
+    # 2 input partitions against the output's 3: each write task holds
+    # keys for several output partitions, so one commit appends several
+    # segments to a partition
+    b.create_topic("in", 2)
     b.produce("in", [(f"k{i}".encode(), f"v{i}".encode(), i) for i in range(30)])
     kafka_sim.register(spark)
     src = (
@@ -755,6 +728,12 @@ def test_sink_streaming_end_to_end_chain(spark, tmp_path):
     }
     # timestamps carried through the sink's timestamp-column path
     assert sorted(int(r.timestamp.timestamp() * 1000) for r in got) == list(range(30))
+    # the output topic has its own contiguous offsets per partition
+    per_part: dict[int, list[int]] = {}
+    for r in got:
+        per_part.setdefault(r.partition, []).append(r.offset)
+    for offs in per_part.values():
+        assert sorted(offs) == list(range(len(offs)))
 
 
 def test_sink_per_row_topic_column(spark, tmp_path):

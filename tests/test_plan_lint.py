@@ -9,22 +9,49 @@ assertions into engine-wide invariants:
   documented slow path; Python work must ride Arrow
   (MapInPandas/ArrowEvalPython) or stay JVM-side.
 
-Streaming replays (the whole x3_ family — including
-x3_stateful_stream_replay — and the x_stream_* queries) and the
-generator pipeline are skipped: invoking them RUNS the stream, and the
-plan of their driver-collected result rows is vacuous anyway; their
-plan hygiene is pinned by their own tests. The ANN recall report is
-skipped for runtime (it executes its searches at build time — its
-components are linted individually and contract-pinned)."""
+Queries that run a stream (their code, or a package helper they call,
+names the replay harness or ``readStream``) are skipped: invoking them
+RUNS the stream, and the plan of their driver-collected result rows is
+vacuous anyway; their plan hygiene is pinned by their own tests. The
+ANN recall report is skipped for runtime (it executes its searches at
+build time — its components are linted individually and
+contract-pinned)."""
 
 from __future__ import annotations
+
+import types
 
 import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
 
-SKIP_PREFIXES = ("x3_", "x_stream", "cta_fixture_dashboard_stream", "gen_scale")
 SKIP = {"e3_ann_recall_report"}
+STREAM_NAMES = {"replay", "readStream"}
+PKG = "public_transit_status_with_apache_kafka_spark"
+
+
+def _names(code: types.CodeType):
+    yield from code.co_names
+    for c in code.co_consts:
+        if isinstance(c, types.CodeType):
+            yield from _names(c)
+
+
+def _runs_a_stream(fn, seen: set | None = None) -> bool:
+    """Whether fn, or a package function it calls by global name, names
+    the replay harness or ``readStream``."""
+    seen = set() if seen is None else seen
+    if fn in seen:
+        return False
+    seen.add(fn)
+    names = set(_names(fn.__code__))
+    if names & STREAM_NAMES:
+        return True
+    return any(
+        _runs_a_stream(g, seen)
+        for g in (fn.__globals__.get(n) for n in names)
+        if isinstance(g, types.FunctionType) and g.__module__.startswith(PKG)
+    )
 
 
 def _unpartitioned_window(plan: str) -> bool:
@@ -61,7 +88,7 @@ def test_no_cartesian_row_udf_or_unpartitioned_window_in_any_plan(spark):
 
     queries = entry.queries()
     names = [
-        n for n in queries if not n.startswith(SKIP_PREFIXES) and n not in SKIP
+        n for n, fn in queries.items() if n not in SKIP and not _runs_a_stream(fn)
     ]
     assert len(names) > 190  # the sweep really covers the registry
     cartesian, row_udf, bare_window, rescans = [], [], [], []
@@ -119,3 +146,25 @@ def test_no_hand_rolled_stream_replay_in_plans():
         if pat in line
     ]
     assert not hits, "use streaming/harness.py instead:\n" + "\n".join(hits)
+
+
+def test_no_unused_function_local_imports_in_package():
+    """Source only (no linter ships here): an import inside a function
+    must be used in that function, nested scopes included."""
+    import ast
+    from pathlib import Path
+
+    root = Path(entry.__file__).parent / PKG
+    hits = set()
+    for f in sorted(root.rglob("*.py")):
+        for fn in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            used = {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+            for imp in ast.walk(fn):
+                if isinstance(imp, (ast.Import, ast.ImportFrom)):
+                    for a in imp.names:
+                        bound = a.asname or a.name.split(".")[0]
+                        if bound not in used:
+                            hits.add(f"{f.relative_to(root)}:{imp.lineno}: {bound}")
+    assert not hits, "unused function-local imports:\n" + "\n".join(sorted(hits))

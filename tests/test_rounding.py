@@ -137,3 +137,48 @@ def test_div_round_int_matches_reference_and_duckdb(spark):
             f"SELECT {_div_round_int_sql(str(num), str(den), 6)}"
         ).fetchone()[0]
         assert sql_got == want, (num, den, sql_got, want)
+
+
+def test_tpch_revenue_rounds_exact_half_cents_like_duckdb(spark, tmp_path):
+    """q3/q5 revenue on lines whose discounted price is an exact half
+    cent: 45316.35 x 0.9 = 40784.715 and 34409.45 x 0.9 = 30968.505.
+    Rounded as doubles the first splits the engines (Spark 40784.72,
+    DuckDB 40784.71) and the second is wrong in both (30968.50). The
+    integer-unit revenue gives the exact HALF-UP cents on both sides."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    double_rev = "round(45316.35::DOUBLE * (1 - 0.10::DOUBLE), 2)"
+    assert duckdb.sql(f"SELECT {double_rev}").fetchone()[0] == 40784.71
+    assert spark.sql(f"SELECT {double_rev} AS r").first().r == 40784.72
+    day = lambda s: dt.datetime.fromisoformat(s)  # noqa: E731
+    tables = {
+        "region": {"r_regionkey": [0], "r_name": ["AMERICA"]},
+        "nation": {"n_nationkey": [1, 2], "n_name": ["N1", "N2"], "n_regionkey": [0, 0]},
+        "customer": {"c_custkey": [1, 2], "c_nationkey": [1, 2],
+                     "c_mktsegment": ["BUILDING", "BUILDING"]},
+        "supplier": {"s_suppkey": [1, 2], "s_nationkey": [1, 2]},
+        "orders": {"o_orderkey": [1, 2], "o_custkey": [1, 2],
+                   "o_orderdate": [day("1997-06-01")] * 2,
+                   "o_orderpriority": ["1-URGENT", "2-HIGH"]},
+        "lineitem": {"l_orderkey": [1, 2], "l_suppkey": [1, 2],
+                     "l_extendedprice": [45316.35, 34409.45],
+                     "l_discount": [0.10, 0.10],
+                     "l_shipdate": [day("1998-06-01")] * 2},
+    }
+    con = duckdb.connect()
+    for name, cols in tables.items():
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table(cols), path)
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
+    want = {40784.72, 30968.51}
+    for q in ("q3_shipping_priority", "q5_local_supplier_volume"):
+        got = {r.revenue for r in entry.queries()[q](spark, str(tmp_path)).collect()}
+        oracle = {r[0] for r in con.execute(
+            f"SELECT revenue FROM ({entry.oracle_sql()[q]})"
+        ).fetchall()}
+        assert got == oracle == want, (q, got, oracle)
