@@ -38,49 +38,53 @@ def turnstile_counts(turnstile: DataFrame) -> DataFrame:
     return turnstile.groupBy("station_id").agg(F.count("*").alias("count"))
 
 
-def train_positions(arrivals: DataFrame) -> DataFrame:
-    """A4/J4 latest-with-tombstone (consumers/models/line.py:31-54).
+def arrival_effects(arrivals: DataFrame) -> DataFrame:
+    """Each arrival means: arrive at (station_id, direction) AND, when
+    prev is set, depart from (prev_station_id, prev_direction). Within
+    one source event the reference applies the depart before the
+    arrive, so the arrive ranks higher at equal ts — encoded by kind:
+    depart=0 < arrive=1. Both effects come out of one explode, so a
+    stream scans and decodes its source once per trigger, not once per
+    branch of a union."""
 
-    Each arrival means: arrive at (station_id, direction) AND depart from
-    (prev_station_id, prev_direction). Explode into both effects, then
-    latest-effect-per-key wins; a depart winning leaves the slot empty
-    (train_id NULL). Within one source event the reference applies the
-    depart before the arrive, so the arrive ranks higher at equal ts —
-    encoded by kind: depart=0 < arrive=1 in the ordering.
+    def effect(station, direction, kind, train_id, train_status):
+        return F.struct(
+            station.alias("station_id"),
+            direction.alias("direction"),
+            F.col("ts").alias("ts"),
+            F.col("seq").alias("seq"),
+            F.lit(kind).alias("kind"),
+            train_id.alias("train_id"),
+            train_status.alias("train_status"),
+        )
+
+    arrive = effect(
+        F.col("station_id"), F.col("direction"), 1,
+        F.col("train_id"), F.col("train_status"),
+    )
+    none = F.lit(None).cast("string")
+    depart = effect(F.col("prev_station_id"), F.col("prev_direction"), 0, none, none)
+    has_prev = F.col("prev_station_id").isNotNull() & F.col("prev_direction").isNotNull()
+    effects = F.when(has_prev, F.array(arrive, depart)).otherwise(F.array(arrive))
+    return arrivals.select(F.explode(effects).alias("e")).select("e.*")
+
+
+def train_positions(arrivals: DataFrame) -> DataFrame:
+    """A4/J4 latest-with-tombstone (consumers/models/line.py:31-54):
+    explode each arrival into its effects, then the latest effect per
+    (station_id, direction) wins; a depart winning leaves the slot empty
+    (train_id NULL). The streaming view (streaming/views.py) is this
+    same plan over a stream.
 
     Requires a unique per-event ``seq`` column for deterministic ordering
     of same-timestamp events from different trains."""
-    arrive = arrivals.select(
-        F.col("station_id"),
-        F.col("direction"),
-        F.col("ts"),
-        F.col("seq"),
-        F.lit(1).alias("kind"),
-        F.col("train_id"),
-        F.col("train_status"),
-    )
-    depart = (
-        arrivals.filter(
-            F.col("prev_station_id").isNotNull() & F.col("prev_direction").isNotNull()
-        )
-        .select(
-            F.col("prev_station_id").alias("station_id"),
-            F.col("prev_direction").alias("direction"),
-            F.col("ts"),
-            F.col("seq"),
-            F.lit(0).alias("kind"),
-            F.lit(None).cast("string").alias("train_id"),
-            F.lit(None).cast("string").alias("train_status"),
-        )
-    )
-    effects = arrive.unionByName(depart)
-    # max_by aggregate over the unique (ts, seq, kind) ordering —
-    # identical to the streaming formulation (streaming/views.py), so
-    # batch and streaming share one shape; map-side partials mean the
-    # shuffle carries one row per key per partition, not every effect
+    # max_by over the unique (ts, seq, kind) ordering: map-side partials
+    # mean the shuffle carries one row per key per partition, not every
+    # effect
     packed = F.struct("train_id", "train_status")
     return (
-        effects.groupBy("station_id", "direction")
+        arrival_effects(arrivals)
+        .groupBy("station_id", "direction")
         .agg(F.max_by(packed, F.struct("ts", "seq", "kind")).alias("m"))
         .select("station_id", "direction", "m.train_id", "m.train_status")
     )

@@ -412,10 +412,10 @@ def cta_broker_dashboard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every kafkasim partition is a Python-datasource read task per
         # trigger, and with four concurrent queries those tasks are the
         # drain's critical path. Round-robin placement carries no
-        # key-hash semantics to preserve (the keyed Avro topics keep 3
-        # partitions so the murmur2 path stays exercised); a real
-        # low-volume weather/changelog topic would be single-partition
-        # on an actual broker too.
+        # key-hash semantics to preserve (the arrivals topic, keyed by
+        # train_id, keeps 3 partitions placed by the broker's default
+        # crc32 hash); a real low-volume weather/changelog topic would
+        # be single-partition on an actual broker too.
         b.create_topic("org.chicago.cta.stations.table.v1", 1)
         b.create_topic("org.chicago.cta.weather.v1", 1)
         a_fields = avro_codec._parse_schema(_json.dumps(ARRIVAL_WIRE))

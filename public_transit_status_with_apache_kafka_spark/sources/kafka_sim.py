@@ -26,10 +26,11 @@ Broker-log layout (append-only, Kafka-segment style):
 
 Each segment holds consecutive records (columns: key binary nullable,
 value binary, ts_ms int64) starting at the base offset encoded in its
-filename; a partition's end offset is the last segment's base + rows.
-Appends create new segments, never rewrite — offsets are stable, so a
-re-read at a given offset range is deterministic (the property every
-delivery-semantics test leans on).
+filename. Segments are contiguous — each ends where the next begins —
+so a partition's end offset is the last segment's base + rows, the one
+footer any call reads. Appends create new segments, never rewrite —
+offsets are stable, so a re-read at a given offset range is
+deterministic (the property every delivery-semantics test leans on).
 
 Records reach the log two ways: `SimBroker.produce` (driver-side, the
 producer client) and the `kafkasim` sink (`df.write` /
@@ -48,7 +49,6 @@ and pyarrow.
 
 from __future__ import annotations
 
-import datetime as _dt
 import json
 import os
 import re
@@ -396,22 +396,22 @@ def _write_segment(
     os.replace(tmp, path)
 
 
-def _segments(pdir: str) -> list[tuple[int, str, int]]:
-    """[(base_offset, path, n_rows)] sorted by base offset."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(os.listdir(pdir)):
-        m = _SEG_RE.match(f)
-        if m:
-            path = os.path.join(pdir, f)
-            out.append((int(m.group(1)), path, pq.read_metadata(path).num_rows))
-    return out
+def _bases(pdir: str) -> list[int]:
+    """Segment base offsets, ascending, from the file names alone."""
+    return sorted(
+        int(m.group(1)) for m in map(_SEG_RE.match, os.listdir(pdir)) if m
+    )
 
 
 def _segment_end(pdir: str) -> int:
-    segs = _segments(pdir)
-    return segs[-1][0] + segs[-1][2] if segs else 0
+    """End offset of a partition: the last segment's base plus its row
+    count — one footer read, whatever the segment count."""
+    import pyarrow.parquet as pq
+
+    bases = _bases(pdir)
+    if not bases:
+        return 0
+    return bases[-1] + pq.read_metadata(_segment_path(pdir, bases[-1])).num_rows
 
 
 # ------------------------------------------------------------- source side
@@ -427,31 +427,41 @@ class _Slice(InputPartition):
 
 
 def _read_slice(s: _Slice):
-    """Yield Kafka-schema tuples for offsets [start, end) of one
-    topic-partition — executor-side, touching only overlapping segments."""
+    """Yield one Kafka-schema Arrow batch per segment overlapping offsets
+    [start, end) of one topic-partition — executor-side, reading no
+    footer: a segment ends where the next begins, and the last is cut
+    at ``end``."""
+    import numpy as np
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    for base, path, n in _segments(s.pdir):
-        if base + n <= s.start or base >= s.end:
+    us = pa.timestamp("us", "UTC")
+    schema = pa.schema([
+        ("key", pa.binary()), ("value", pa.binary()), ("topic", pa.string()),
+        ("partition", pa.int32()), ("offset", pa.int64()), ("timestamp", us),
+        ("timestampType", pa.int32()),
+    ])
+    bases = _bases(s.pdir)
+    for base, nxt in zip(bases, bases[1:] + [s.end]):
+        lo, hi = max(s.start, base), min(s.end, nxt)
+        if lo >= hi:
             continue
-        tbl = pq.read_table(path)
-        keys, vals, tss = (
-            tbl.column("key").to_pylist(),
-            tbl.column("value").to_pylist(),
-            tbl.column("ts_ms").to_pylist(),
+        seg = pq.read_table(_segment_path(s.pdir, base)).slice(lo - base, hi - lo)
+        n = seg.num_rows
+        yield pa.RecordBatch.from_arrays(
+            [
+                seg.column("key").combine_chunks(),
+                seg.column("value").combine_chunks(),
+                pa.repeat(pa.scalar(s.topic, pa.string()), n),
+                pa.repeat(pa.scalar(s.partition, pa.int32()), n),
+                pa.array(np.arange(lo, lo + n, dtype=np.int64)),
+                # ms -> us is exact: the record's ts_ms, in Spark's unit
+                seg.column("ts_ms").combine_chunks()
+                .cast(pa.timestamp("ms", "UTC")).cast(us),
+                pa.repeat(pa.scalar(0, pa.int32()), n),  # CreateTime, like the real source
+            ],
+            schema=schema,
         )
-        lo = max(s.start - base, 0)
-        hi = min(s.end - base, n)
-        for i in range(lo, hi):
-            yield (
-                keys[i],
-                vals[i],
-                s.topic,
-                s.partition,
-                base + i,
-                _dt.datetime.fromtimestamp(tss[i] / 1000.0, tz=_dt.timezone.utc),
-                0,  # CreateTime, like the real source
-            )
 
 
 def _slices(log_dir: str, start: dict, end: dict) -> list[_Slice]:
@@ -752,14 +762,18 @@ class KafkaSimWriter(DataSourceArrowWriter):
         only — O(staged files), never O(records)."""
         import shutil
 
+        msgs = sorted((m for m in messages if m is not None), key=lambda m: m.seq)
+        # every partition the executors placed over exists, not only
+        # those that received records: a topic first named by a row's
+        # `topic` column gets all `_n_for` of them
+        broker = SimBroker(self.log_dir)
+        for t in {seg[0] for m in msgs for seg in m.segments}:
+            broker.create_topic(t, self._n_for(t))
         ends: dict[tuple[str, int], int] = {}
         published = 0
-        for msg in sorted(
-            (m for m in messages if m is not None), key=lambda m: m.seq
-        ):
+        for msg in msgs:
             for t, p, path, n_rows in msg.segments:
                 pdir = _pdir(self.log_dir, t, p)
-                os.makedirs(pdir, exist_ok=True)
                 if (t, p) not in ends:
                     ends[(t, p)] = _segment_end(pdir)
                 base = ends[(t, p)]

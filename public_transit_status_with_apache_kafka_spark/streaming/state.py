@@ -17,7 +17,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -41,27 +40,6 @@ OUTPUT_SCHEMA = T.StructType(
         T.StructField("train_status", T.StringType()),
     ]
 )
-
-
-def explode_effects(arrivals: DataFrame) -> DataFrame:
-    """Each arrival event = arrive(station,dir) + depart(prev_station,
-    prev_dir); kind orders the depart before the arrive at equal ts
-    (the reference applies them in that order within one message)."""
-    arrive = arrivals.select(
-        "station_id", "direction", "ts", "seq",
-        F.lit(1).alias("kind"), "train_id", "train_status",
-    )
-    depart = arrivals.filter(
-        F.col("prev_station_id").isNotNull() & F.col("prev_direction").isNotNull()
-    ).select(
-        F.col("prev_station_id").alias("station_id"),
-        F.col("prev_direction").alias("direction"),
-        "ts", "seq",
-        F.lit(0).alias("kind"),
-        F.lit(None).cast("string").alias("train_id"),
-        F.lit(None).cast("string").alias("train_status"),
-    )
-    return arrive.unionByName(depart)
 
 
 def _track(

@@ -172,8 +172,8 @@ def train_positions_stateful_v2(
     state_ttl_ms: int | None = None,
     idle_timeout_ms: int | None = None,
 ) -> DataFrame:
-    """transformWithStateInPandas over exploded effects (state.
-    explode_effects). Update mode: emits the current occupant of every
+    """transformWithStateInPandas over exploded effects (cta_views.
+    arrival_effects). Update mode: emits the current occupant of every
     touched key per micro-batch, exactly like
     state.train_positions_stateful. With ``state_ttl_ms`` /
     ``idle_timeout_ms`` the TTL processor runs in processingTime mode

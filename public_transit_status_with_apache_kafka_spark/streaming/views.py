@@ -19,6 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators import cta_views
+from ..session import scoped_conf
+
 
 def stream_from_directory(spark: SparkSession, path: str, schema) -> DataFrame:
     """File-source stream: replays parquet drops as micro-batches (the
@@ -51,39 +54,12 @@ def stations_dim_stream(stations_raw: DataFrame) -> DataFrame:
 
 
 def train_positions_stream(arrivals: DataFrame) -> DataFrame:
-    """A4 (consumers/models/line.py:31-54) as a streaming aggregate:
-    explode arrive/depart effects, keep the max-ordered effect per
-    (station_id, direction). Pure-aggregate formulation (max_by over the
-    (ts, seq, kind) ordering struct) — the applyInPandasWithState variant
-    lives in streaming/state.py."""
-    arrive = arrivals.select(
-        "station_id",
-        "direction",
-        "ts",
-        "seq",
-        F.lit(1).alias("kind"),
-        "train_id",
-        "train_status",
-    )
-    depart = arrivals.filter(
-        F.col("prev_station_id").isNotNull() & F.col("prev_direction").isNotNull()
-    ).select(
-        F.col("prev_station_id").alias("station_id"),
-        F.col("prev_direction").alias("direction"),
-        "ts",
-        "seq",
-        F.lit(0).alias("kind"),
-        F.lit(None).cast("string").alias("train_id"),
-        F.lit(None).cast("string").alias("train_status"),
-    )
-    effects = arrive.unionByName(depart)
-    order_key = F.struct("ts", "seq", "kind")
-    packed = F.struct("train_id", "train_status")
-    return (
-        effects.groupBy("station_id", "direction")
-        .agg(F.max_by(packed, order_key).alias("latest"))
-        .select("station_id", "direction", "latest.train_id", "latest.train_status")
-    )
+    """A4 (consumers/models/line.py:31-54) as a streaming aggregate: the
+    batch plan (cta_views.train_positions: one explode into arrive and
+    depart effects, max_by over the (ts, seq, kind) ordering per
+    (station_id, direction)) over a stream — the applyInPandasWithState
+    variant lives in streaming/state.py."""
+    return cta_views.train_positions(arrivals)
 
 
 def weather_now_stream(weather: DataFrame) -> DataFrame:
@@ -139,4 +115,9 @@ def start_memory_view(
     w = df.writeStream.outputMode("complete").format("memory").queryName(name)
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start()
+    # complete mode sends the whole result to the driver every batch, so
+    # more state stores buy no parallelism: each is one more task and
+    # one more checkpoint commit per trigger. A stream fixes its store
+    # count when it starts.
+    with scoped_conf(df.sparkSession, {"spark.sql.shuffle.partitions": "1"}):
+        return w.start()

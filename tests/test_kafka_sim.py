@@ -652,6 +652,34 @@ def test_sink_abort_publishes_nothing(tmp_path):
     assert all(v == 0 for v in kafka_sim.SimBroker(log).end_offsets("t").values())
 
 
+def test_sink_new_topic_from_row_column_gets_default_partitions(tmp_path):
+    """A topic first made through the per-row `topic` column gets all
+    `defaultPartitions` dirs, not only those that received records:
+    keys a and c both hash to partition 0 of 3, and a later keyed
+    produce must still hash % 3."""
+    import zlib
+
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField
+
+    from public_transit_status_with_apache_kafka_spark.sources.kafka_sim import KafkaSimWriter
+
+    assert zlib.crc32(b"a") % 3 == zlib.crc32(b"c") % 3 == 0
+    log = str(tmp_path / "log")
+    w = KafkaSimWriter(
+        _sink_schema().add(StructField("topic", StringType())), {"path": log}
+    )
+    batch = pa.record_batch(
+        {"key": pa.array([b"a", b"c"], pa.binary()),
+         "value": pa.array([b"1", b"3"], pa.binary()),
+         "topic": pa.array(["t.red", "t.red"])}
+    )
+    w.commit([w.write(iter([batch]))])
+    b = kafka_sim.SimBroker(log)
+    assert b.n_partitions("t.red") == 3
+    assert b.end_offsets("t.red") == {0: 2, 1: 0, 2: 0}
+
+
 def test_sink_stream_exactly_once_journal(tmp_path):
     """Streaming commit idempotence: with exactlyOnce + writerId, a
     REPLAYED batchId discards its staged files instead of appending
@@ -836,3 +864,66 @@ def test_topic_ensurer_idempotence(tmp_path):
     b = kafka_sim.SimBroker(log)
     b.produce("org.chicago.cta.stations", [(b"k", b"v", 1)])
     assert b.end_offsets("org.chicago.cta.stations")[kafka_sim.partition_for_key(b"k", 3)] == 1
+
+
+# ------------------------------------------------------------ read path
+# Segments are contiguous, so their extents come from the file names:
+# only a partition's end offset needs a footer (its last segment's).
+
+
+def test_offsets_read_one_footer_per_partition(tmp_path, monkeypatch):
+    import os
+
+    import pyarrow.parquet as pq
+
+    log = str(tmp_path / "log")
+    b = kafka_sim.SimBroker(log, default_partitions=2)
+    for i in range(50):
+        b.produce("t", [(None, b"a", i), (None, b"b", i)])  # one segment per partition
+    reads = []
+    real = pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata", lambda path, *a, **k: reads.append(path) or real(path, *a, **k))
+
+    def footers(call):
+        del reads[:]
+        out = call()
+        assert len({os.path.dirname(r) for r in reads}) == len(reads) <= 2, reads
+        return out
+
+    assert footers(lambda: b.end_offsets("t")) == {0: 50, 1: 50}
+    assert footers(lambda: kafka_sim._disk_offsets(log, ["t"])) == {"t": {"0": 50, "1": 50}}
+    footers(lambda: b.produce("t", [(None, b"c", 50), (None, b"d", 50)]))
+    assert b.end_offsets("t") == {0: 51, 1: 51}
+
+
+def test_read_slice_yields_arrow_batches_of_kafka_schema(tmp_path):
+    """A slice starting and ending inside segments, across 3 of them,
+    with a null key: contiguous offsets, ts_ms exactly (us = ms * 1000),
+    keys and values byte-equal with the null kept, SCHEMA's columns."""
+    import pyarrow as pa
+
+    log = str(tmp_path / "log")
+    b = kafka_sim.SimBroker(log, default_partitions=1)
+
+    def rec(o):
+        key = None if o == 5 else f"k{o}".encode()
+        return key, f"v{o}".encode(), 1_700_000_000_123 + 7 * o
+
+    for lo, hi in [(0, 4), (4, 7), (7, 12), (12, 16)]:  # segments at 0, 4, 7, 12
+        b.produce("t", [rec(o) for o in range(lo, hi)], partition=0)
+    s = kafka_sim._Slice("t", 0, kafka_sim._pdir(log, "t", 0), 2, 10)
+    batches = list(kafka_sim._read_slice(s))
+    assert len(batches) == 3
+    tbl = pa.Table.from_batches(batches)
+    assert tbl.schema.names == [f.split()[0] for f in kafka_sim.SCHEMA.split(", ")]
+    assert tbl.column("offset").to_pylist() == list(range(2, 10))
+    assert tbl.schema.field("timestamp").type == pa.timestamp("us", "UTC")
+    assert tbl.column("timestamp").cast(pa.int64()).to_pylist() == [
+        rec(o)[2] * 1000 for o in range(2, 10)
+    ]
+    assert tbl.column("key").to_pylist() == [rec(o)[0] for o in range(2, 10)]
+    assert tbl.column("key").null_count == 1
+    assert tbl.column("value").to_pylist() == [rec(o)[1] for o in range(2, 10)]
+    assert set(tbl.column("topic").to_pylist()) == {"t"}
+    assert set(tbl.column("partition").to_pylist()) == {0}
+    assert set(tbl.column("timestampType").to_pylist()) == {0}

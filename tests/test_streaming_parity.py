@@ -32,13 +32,16 @@ def fx_dirs(spark, tmp_path_factory):
 
 
 def _drain(stream_df, name, mode="complete"):
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    if mode == "complete":  # the dashboard's serving path
+        q = sv.start_memory_view(stream_df, name, available_now=True)
+    else:
+        q = (
+            stream_df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
     q.awaitTermination(120)
     return q
 
@@ -66,9 +69,20 @@ def test_stations_dim_stream_equals_batch(spark, fx_dirs):
 def test_train_positions_stream_equals_batch(spark, fx_dirs):
     fx, dirs = fx_dirs
     src = sv.stream_from_directory(spark, dirs["arrivals"], generator.ARRIVALS_SCHEMA)
-    _drain(sv.train_positions_stream(src), "t_pos")
+    q = _drain(sv.train_positions_stream(src), "t_pos")
     batch = {tuple(r) for r in cta_views.train_positions(fx["arrivals"]).collect()}
     assert _rows(spark, "t_pos") == batch
+    # each arrival is read once per trigger (arrive and depart come out
+    # of one scan), and the memory view keeps one state store
+    progress = q.recentProgress
+    assert sum(p["numInputRows"] for p in progress) == fx["arrivals"].count()
+    stateful = [p for p in progress if p["stateOperators"]]
+    assert stateful
+    assert all(
+        op["numStateStoreInstances"] == 1
+        for p in stateful
+        for op in p["stateOperators"]
+    )
 
 
 def test_weather_now_stream_equals_batch(spark, fx_dirs):
@@ -89,7 +103,7 @@ def test_stateful_tracker_converges_to_batch(spark, fx_dirs, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(dirs["arrivals"])
     )
-    tracked = st.train_positions_stateful(st.explode_effects(src))
+    tracked = st.train_positions_stateful(cta_views.arrival_effects(src))
 
     served: dict = {}
 

@@ -12,7 +12,10 @@ import pytest
 from pyspark.sql import types as T
 
 from public_transit_status_with_apache_kafka_spark.generator import ARRIVALS_SCHEMA
-from public_transit_status_with_apache_kafka_spark.operators.cta_views import train_positions
+from public_transit_status_with_apache_kafka_spark.operators.cta_views import (
+    arrival_effects,
+    train_positions,
+)
 
 
 def _arrivals(spark, rows):
@@ -340,7 +343,6 @@ def test_tracker_v2_stream_converges(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from public_transit_status_with_apache_kafka_spark import generator
-    from public_transit_status_with_apache_kafka_spark.streaming import state as st
     from public_transit_status_with_apache_kafka_spark.streaming import state_v2 as st2
 
     spark.conf.set(
@@ -362,7 +364,7 @@ def test_tracker_v2_stream_converges(spark, tmp_path):
             served[(r.station_id, r.direction)] = (r.train_id, r.train_status)
 
     q = (
-        st2.train_positions_stateful_v2(st.explode_effects(src))
+        st2.train_positions_stateful_v2(arrival_effects(src))
         .writeStream.outputMode("update")
         .foreachBatch(upsert)
         .option("checkpointLocation", str(tmp_path / "ckpt_v2"))
